@@ -173,7 +173,7 @@ object SparkEntry {
     "kg_event_edges" -> ((s, d) => kg(s, d).eventEdges
       .select("head_id", "tail_id", "relation_type", "n_sources")),
     "kg_integrity" -> ((s, d) =>
-      withZeroAnchor(graft.sink.GraphSink.integrity(kg(s, d)))),
+      withZeroAnchor(graft.sink.GraphSink.integrity(kg(s, d), config))),
     // extraction evidence invariants (the last trust-the-ScalaTest gap
     // on the extraction side): every mention surface occurs in its
     // chunk's normalized content, and every triple endpoint appears

@@ -31,10 +31,21 @@ object ConnectedComponents {
     * overrides (the bench sets 0 so the scaling evidence measures the
     * distributed fixpoint — the path a real cluster would take — even
     * when the synthetic vocabulary sits under the driver-solve cap). */
-  val LocalSolveMax: Long =
-    sys.env.get("GRAFT_CC_LOCAL_MAX")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(500000L) // malformed values fall back, not crash the JVM
+  val LocalSolveMax: Long = parseLocalSolveMax(sys.env.get("GRAFT_CC_LOCAL_MAX"))
+
+  /** A GRAFT_CC_LOCAL_MAX value: unset or blank gives the 500k default;
+    * anything but a non-negative integer falls back to it too, with a
+    * stderr warning naming the value (not a JVM crash, not silently). */
+  def parseLocalSolveMax(raw: Option[String]): Long = {
+    val default = 500000L
+    raw.map(_.trim).filter(_.nonEmpty).fold(default) { v =>
+      v.toLongOption.filter(_ >= 0).getOrElse {
+        Console.err.println(s"[cc] ignoring GRAFT_CC_LOCAL_MAX='$v' " +
+          s"(not a non-negative integer); using $default")
+        default
+      }
+    }
+  }
 
   def run(edgesIn: DataFrame, maxIter: Int = 50,
       localSolveMax: Long = LocalSolveMax): DataFrame = {

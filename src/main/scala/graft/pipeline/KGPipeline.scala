@@ -177,7 +177,8 @@ object KGPipeline {
           raw.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$dir/extraction")
         }
-        spark.read.parquet(s"$dir/extraction")
+        // the written schema, not an inference read of the footers
+        spark.read.schema(raw.schema).parquet(s"$dir/extraction")
       case None =>
         raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }

@@ -1,9 +1,15 @@
 package graft.pipeline
 
 import graft.pages.PagesGenerator
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Per-stage checkpointing + lineage metrics — the Spark-native form of
   * the reference's temp-batch JSON checkpoints and chunk-exists resume
@@ -11,12 +17,21 @@ import org.apache.spark.sql.functions._
   * Base_Neo4j.py:109-158; SURVEY.md §7.3).
   *
   * Each stage writes its output table under `outDir/<stage>` and appends
-  * per-partition lineage rows (run_id, stage, partition_id, rows,
-  * wall_ms, committed_at) to `outDir/_metrics`. A resumed run skips any
-  * stage whose output already committed (parquet _SUCCESS marker — the
-  * atomic-commit analogue of the reference's chunk-exists check) and
-  * recomputes only downstream stages, so a job killed after stage k
-  * replays nothing before k+1.
+  * lineage rows (run_id, stage, partition_id, file, rows, wall_ms,
+  * committed_at) to `outDir/_metrics`: one row per committed part file,
+  * its row count read from the file's parquet footer on the driver, and
+  * `partition_id` the number of the write task that produced it. A
+  * resumed run skips any stage whose output already committed (parquet
+  * _SUCCESS marker — the atomic-commit analogue of the reference's
+  * chunk-exists check) and recomputes only downstream stages, so a job
+  * killed after stage k replays nothing before k+1.
+  *
+  * Committing and reopening a stage launches no Spark job beyond the
+  * stage's own write and its one `_metrics` append: every stage, written
+  * or reused, is reopened with the Spark schema stored in its footers
+  * (no schema-inference read), and [[rows]] serves its row count from
+  * the footer sums (no `count()`), which is where [[KGJob]]'s per-stage
+  * counts come from.
   */
 final class Lineage(
     spark: SparkSession,
@@ -25,13 +40,15 @@ final class Lineage(
     resume: Boolean,
     jobFingerprint: String = "") {
 
+  private def conf: Configuration = spark.sparkContext.hadoopConfiguration
+
   // Hadoop FileSystem API, not java.nio: outDir may be any scheme the
   // cluster mounts (hdfs://, s3a://, ...) — a driver-local Files.exists
   // would silently never see a remote _SUCCESS and resume would rerun
   // every stage
   private def committed(path: String): Boolean = {
     val p = new Path(path, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    p.getFileSystem(conf).exists(p)
   }
 
   // Semantic-format stamp: schema guards (`requires`) can't see a
@@ -58,7 +75,7 @@ final class Lineage(
 
   private def stampMatches(path: String, extra: String): Boolean = {
     val p = stampPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) false
     else
       try {
@@ -79,7 +96,7 @@ final class Lineage(
 
   private def writeStamp(path: String, extra: String): Unit = {
     val p = stampPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
     val out = fs.create(p, true)
     try out.write(stampValue(extra).getBytes("UTF-8")) finally out.close()
   }
@@ -100,38 +117,47 @@ final class Lineage(
       fingerprint: String = "")
       (compute: => DataFrame): DataFrame = {
     val path = s"$outDir/$name"
-    val reusable = resume && committed(path) &&
-      stampMatches(path, fingerprint) &&
-      (requires.isEmpty || {
-        try {
-          val cols = spark.read.parquet(path).columns.toSet
-          requires.forall(cols)
-        } catch { case _: Exception => false }
-      })
-    if (!reusable) {
+    // footers, not a read-back: a missing or unreadable footer (like a
+    // stale stamp) means "not reusable" and the stage recomputes
+    val reused =
+      if (resume && committed(path) && stampMatches(path, fingerprint))
+        Lineage.footers(conf, path)
+          .filter(f => requires.forall(f.schema.fieldNames.contains))
+      else None
+    val footers = reused.getOrElse {
       val t0 = System.nanoTime()
       compute.write.mode(SaveMode.Overwrite).parquet(path)
       writeStamp(path, fingerprint)
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      val written = spark.read.parquet(path)
-      // one lineage row per committed file: these files ARE the next
-      // stage's input files, so (file, rows) is the input-file + row-
-      // range record the resume check consults (north rule: lineage =
-      // input file, row ranges, counts per partition)
-      val partRows = written
-        .groupBy(spark_partition_id().as("partition_id"),
-          input_file_name().as("file"))
-        .agg(count(lit(1)).as("rows"))
-        .withColumn("run_id", lit(runId))
-        .withColumn("stage", lit(name))
-        .withColumn("wall_ms", lit(wallMs))
-        .withColumn("committed_at", current_timestamp())
-        .select("run_id", "stage", "partition_id", "file", "rows",
-          "wall_ms", "committed_at")
-      partRows.write.mode(SaveMode.Append).parquet(s"$outDir/_metrics")
+      val written = Lineage.footers(conf, path).getOrElse(
+        throw new IllegalStateException(s"stage $name committed no readable parquet footers"))
+      appendMetrics(name, wallMs, written)
+      written
     }
-    spark.read.parquet(path)
+    stageRows(name) = footers.rows
+    spark.read.schema(footers.schema).parquet(path)
   }
+
+  // one lineage row per committed file: these files ARE the next
+  // stage's input files, so (file, rows) is the input-file + row-range
+  // record the resume check consults (north rule: lineage = input file,
+  // row ranges, counts per partition). A small local frame, written as
+  // one file per commit.
+  private def appendMetrics(name: String, wallMs: Long,
+      footers: Lineage.Footers): Unit = {
+    val at = java.sql.Timestamp.from(java.time.Instant.now())
+    val rows = footers.files.map { case (file, n) =>
+      Row(runId, name, Lineage.writeTask(file), file.toString, n, wallMs, at)
+    }
+    spark.createDataFrame(rows.asJava, Lineage.MetricsSchema).coalesce(1)
+      .write.mode(SaveMode.Append).parquet(s"$outDir/_metrics")
+  }
+
+  private val stageRows = scala.collection.mutable.Map.empty[String, Long]
+
+  /** Row count of a stage this instance committed or reused: the sum of
+    * its part files' footer row counts. */
+  def rows(name: String): Long = stageRows(name)
 
   // mergeSchema: _metrics is append-only across runs, so directories
   // written by different library versions may mix schemas
@@ -148,6 +174,62 @@ object Lineage {
     * recipe; pre-stamp outDirs (round <= 2) have no marker and always
     * recompute. */
   val FormatVersion = "3"
+
+  /** The `_metrics` row schema (unchanged since the table's first
+    * version; every column non-null). */
+  val MetricsSchema: StructType = StructType(Seq(
+    StructField("run_id", StringType, nullable = false),
+    StructField("stage", StringType, nullable = false),
+    StructField("partition_id", IntegerType, nullable = false),
+    StructField("file", StringType, nullable = false),
+    StructField("rows", LongType, nullable = false),
+    StructField("wall_ms", LongType, nullable = false),
+    StructField("committed_at", TimestampType, nullable = false)))
+
+  /** What a committed stage's parquet footers record: each data file
+    * with its row count, and the Spark schema they were written with. */
+  final case class Footers(files: Seq[(Path, Long)], schema: StructType) {
+    def rows: Long = files.map(_._2).sum
+  }
+
+  // the key under which Spark's parquet writer stores the row schema
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Reads the footer of every data file in the stage directory `path`
+    * on the driver, through the Hadoop FS of the path's scheme. None
+    * when there is no data file, a footer is unreadable or carries no
+    * Spark schema, or the files disagree on the schema. */
+  def footers(conf: Configuration, path: String): Option[Footers] =
+    try {
+      val dir = new Path(path)
+      val files = dir.getFileSystem(conf).listStatus(dir).toSeq
+        .filter { s =>
+          val n = s.getPath.getName
+          s.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }
+        .sortBy(_.getPath.getName)
+      val read = files.map { s =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        try (s.getPath, r.getRecordCount, Option(
+          r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+        finally r.close()
+      }
+      read.map(_._3).distinct match {
+        case Seq(Some(json)) => Some(Footers(read.map(f => (f._1, f._2)),
+          DataType.fromJson(json).asInstanceOf[StructType]))
+        case _ => None
+      }
+    } catch { case NonFatal(_) => None }
+
+  private val PartFile = """part-(\d+)-.*""".r
+
+  /** The write task number in a Spark part-file name
+    * (`part-00003-<uuid>-c000.snappy.parquet` -> 3); -1 for any other
+    * name. */
+  private def writeTask(file: Path): Int = file.getName match {
+    case PartFile(n) => n.toInt
+    case _ => -1
+  }
 
   /** The exact stamp a KGJob.run stage commits (version | nPages
     * [| cfg]) — for tests that must restore a wiped stamp. */
@@ -194,7 +276,8 @@ object KGJob {
     spark.stop()
   }
 
-  /** Stage-checkpointed pipeline; returns stage -> row count. */
+  /** Stage-checkpointed pipeline; returns stage -> row count, as the
+    * lineage recorded it from the committed footers (no count query). */
   def run(spark: SparkSession, nPages: Long, outDir: String,
       resume: Boolean = false, partitions: Int = 32,
       cfg: graft.GraftConfig = graft.GraftConfig.default)
@@ -229,38 +312,34 @@ object KGJob {
     val mentions = lin.stage("mentions", requires = Seq("ord"))(extracted.mentions)
     val triples = lin.stage("triples")(extracted.triples)
     val events = lin.stage("events")(extracted.events)
-    val eventEdges = lin.stage("event_edges") {
+    lin.stage("event_edges") {
       KGPipeline.eventEdges(events, extracted.eventRels)
     }
     lazy val cano = graft.canon.Canonicalizer.canonicalize(
       mentions.withColumnRenamed("chunk_id", "chunkId"), cfg)
-    val entities = lin.stage("entities", fingerprint = cfgFp)(cano._1)
+    lin.stage("entities", fingerprint = cfgFp)(cano._1)
     // requires name_key: a resume over an outDir committed before the
     // name map carried it would otherwise reuse the 2-column table and
     // break the alias-closure/entity-counts consumers downstream
     val nameMap = lin.stage("name_map", requires = Seq("name_key"),
       fingerprint = cfgFp)(cano._2)
-    val edges = lin.stage("edges", fingerprint = cfgFp) {
+    lin.stage("edges", fingerprint = cfgFp) {
       graft.canon.Canonicalizer.rewriteTriples(
         triples.withColumnRenamed("chunk_id", "chunkId"), nameMap, cfg)
     }
-    val participates = lin.stage("participates", fingerprint = cfgFp) {
+    lin.stage("participates", fingerprint = cfgFp) {
       events.select(col("event_id"), explode(col("participants")).as("entity_name"))
         .join(nameMap, "entity_name")
         .select(col("canonical_id"), col("event_id"))
         .distinct()
     }
-    val eventSimilar = lin.stage("event_similar", fingerprint = cfgFp) {
+    lin.stage("event_similar", fingerprint = cfgFp) {
       graft.canon.Canonicalizer.eventKnn(events,
         cfg.eventKnnTopK, cfg.eventKnnCutoff)
     }
-    Seq(
-      "pages" -> pages.count(), "chunks" -> chunks.count(),
-      "mentions" -> mentions.count(), "triples" -> triples.count(),
-      "events" -> events.count(), "event_edges" -> eventEdges.count(),
-      "entities" -> entities.count(),
-      "edges" -> edges.count(), "participates" -> participates.count(),
-      "event_similar" -> eventSimilar.count())
+    Seq("pages", "chunks", "mentions", "triples", "events", "event_edges",
+      "entities", "edges", "participates", "event_similar")
+      .map(s => s -> lin.rows(s))
   }
 
 }

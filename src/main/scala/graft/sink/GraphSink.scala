@@ -129,8 +129,9 @@ object GraphSink {
     * Emitted as data rows so the driver's oracle can recompute each
     * count independently from the dumped tables — a violations>0 row
     * or a Spark-vs-DuckDB join-semantics divergence both break the
-    * correctness gate. */
-  def integrity(r: KGPipeline.Result): DataFrame = {
+    * correctness gate. The id-set broadcasts are gated on the run's
+    * `cfg.broadcastNameMapMax`. */
+  def integrity(r: KGPipeline.Result, cfg: graft.GraftConfig): DataFrame = {
     // Each small side is ONE un-renamed subtree per id space (ents 3x,
     // evs 5x, chs 2x), joined with explicit conditions: the former
     // per-check withColumnRenamed made every build side a distinct
@@ -146,7 +147,7 @@ object GraphSink {
     // for its anti-join; past it (web-scale node tables) the joins fall
     // back to sort-merge with the reused exchange. The counts are cheap
     // actions over persisted frames.
-    val bcap = graft.GraftConfig.default.broadcastNameMapMax
+    val bcap = cfg.broadcastNameMapMax
     def gated(df: DataFrame): DataFrame =
       if (df.count() <= bcap) broadcast(df) else df
     val ents = gated(r.entities.select(col("canonical_id")))

@@ -37,6 +37,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(dist == oracle(edges))
   }
 
+  test("GRAFT_CC_LOCAL_MAX: valid values parse, blank and malformed fall back") {
+    def parse(v: Option[String]): (Long, String) = {
+      val err = new java.io.ByteArrayOutputStream()
+      val n = Console.withErr(err)(ConnectedComponents.parseLocalSolveMax(v))
+      (n, err.toString("UTF-8"))
+    }
+    assert(parse(Some("1234")) == ((1234L, "")))
+    assert(parse(Some(" 0 ")) == ((0L, "")))
+    // unset and blank mean "no override": the default, without a warning
+    assert(parse(None) == ((500000L, "")))
+    assert(parse(Some("  ")) == ((500000L, "")))
+    // malformed: the default, with a warning that names the value
+    for (bad <- Seq("5e5", "abc", "-1", "1_000")) {
+      val (n, msg) = parse(Some(bad))
+      assert(n == 500000L, bad)
+      assert(msg.contains(s"'$bad'"), s"no warning naming '$bad': $msg")
+    }
+  }
+
   test("chain graph collapses to one component rooted at min") {
     check((1L to 20L).sliding(2).map(s => (s(0), s(1))).toSeq)
   }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import graft.SparkSpec
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -288,5 +290,94 @@ class PipelineSpec extends SparkSpec {
       }
     }.toSet
     assert(got == expected)
+  }
+
+  test("a resume over a fully committed outDir launches no Spark job") {
+    val dir = Files.createTempDirectory("kg_zero_jobs").toString
+    val fresh = KGJob.run(spark, 40, dir, resume = false, partitions = 2)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // the fresh run's events are delivered before the listener joins
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val resumed =
+      try KGJob.run(spark, 40, dir, resume = true, partitions = 2)
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get == 0, s"resume of a committed outDir launched ${jobs.get} jobs")
+    assert(resumed == fresh)
+  }
+
+  /** Per stage KGJob.run reported: the count equals a Spark count of the
+    * committed table; the stage's newest `_metrics` commit has one row
+    * per part file, with distinct write tasks, summing to that count;
+    * and the footer schema the stage reopens with reads the table back
+    * exactly as schema inference does. */
+  private def assertLineageExact(out: String, counts: Seq[(String, Long)]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val metrics = spark.read.parquet(s"$out/_metrics").persist()
+    assert(counts.map(_._1) == Seq("pages", "chunks", "mentions", "triples",
+      "events", "event_edges", "entities", "edges", "participates", "event_similar"))
+    for ((stage, n) <- counts) {
+      val p = s"$out/$stage"
+      assert(spark.read.parquet(p).count() == n, s"$stage: reported count")
+      val dir = new Path(p)
+      val partFiles = dir.getFileSystem(conf).listStatus(dir)
+        .map(_.getPath.getName).filter(_.startsWith("part-")).toSet
+      val commits = metrics.filter(col("stage") === stage)
+      val newest = commits.filter(col("committed_at") ===
+        commits.agg(max("committed_at")).head().getTimestamp(0))
+        .select("file", "rows", "partition_id").collect()
+      assert(newest.map(r => new Path(r.getString(0)).getName).toSet == partFiles,
+        s"$stage: lineage rows are not one per part file")
+      assert(newest.length == partFiles.size, s"$stage: duplicate lineage rows")
+      assert(newest.map(_.getInt(2)).distinct.length == newest.length,
+        s"$stage: write task numbers repeat")
+      assert(newest.map(_.getLong(1)).sum == n, s"$stage: lineage rows sum")
+      val recorded = Lineage.footers(conf, p).get.schema
+      assert(spark.read.schema(recorded).parquet(p).schema ==
+        spark.read.parquet(p).schema, s"$stage: recorded schema")
+    }
+    metrics.unpersist()
+  }
+
+  test("lineage is exact: fresh run, partial resume, non-local scheme") {
+    val fresh = Files.createTempDirectory("kg_exact").toString
+    assertLineageExact(fresh, KGJob.run(spark, 60, fresh, resume = false, partitions = 3))
+    // a kill after "triples": the resume reuses the front and recommits the tail
+    Seq("entities", "name_map", "edges").foreach { s =>
+      val dir = new java.io.File(s"$fresh/$s")
+      dir.listFiles.foreach(_.delete()); dir.delete()
+    }
+    assertLineageExact(fresh, KGJob.run(spark, 60, fresh, resume = true, partitions = 3))
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.mockfs.impl", classOf[MockFs].getName)
+    val mock = s"mockfs://${Files.createTempDirectory("kg_exact_mockfs")}"
+    assertLineageExact(mock, KGJob.run(spark, 60, mock, resume = false, partitions = 3))
+  }
+
+  test("resume recomputes a committed stage whose parquet footer is unreadable") {
+    val dir = Files.createTempDirectory("kg_footer").toString
+    KGJob.run(spark, 40, dir, resume = false, partitions = 2)
+    def metricRows(stage: String): Long = spark.read
+      .parquet(s"$dir/_metrics").filter(col("stage") === stage).count()
+    val (evBefore, pgBefore) = (metricRows("events"), metricRows("pages"))
+    // overwrite one events part file (through the Hadoop FS API, so its
+    // checksum stays valid) with bytes that are not parquet
+    val events = new Path(s"$dir/events")
+    val fs = events.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(events).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).head
+    val out = fs.create(part, true)
+    try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+    KGJob.run(spark, 40, dir, resume = true, partitions = 2)
+    assert(metricRows("events") > evBefore, "stage with a corrupt footer was reused")
+    assert(metricRows("pages") == pgBefore, "unaffected stage was recomputed")
+    assert(spark.read.parquet(s"$dir/events").count() > 0)
   }
 }
