@@ -30,9 +30,8 @@ package graft
   * @param maxBandSize    hot-band guard: band keys shared by more
   *   distinct names than this are dropped as degenerate
   * @param broadcastNameMapMax  endpoint-rewrite joins broadcast the
-  *   name map at or below this row count, shuffle above
-  * @param broadcastEmbeddingMax  candidate-verify embedding lookup
-  *   broadcasts at or below this row count (byte-derived: ~600 B/row)
+  *   name map at or below this row count, shuffle above; the candidate
+  *   verify broadcasts its display-name lookup under the same cap
   * @param ccLocalSolveMax  edge count at or below which connected
   *   components solve on the driver (union-find) instead of the
   *   distributed large-star/small-star fixpoint; defaults to the
@@ -48,7 +47,6 @@ final case class GraftConfig(
     listCap: Int = 64,
     maxBandSize: Int = 10000,
     broadcastNameMapMax: Long = 5000000L,
-    broadcastEmbeddingMax: Long = 100000L,
     ccLocalSolveMax: Long = graft.canon.ConnectedComponents.LocalSolveMax)
 
 object GraftConfig {
@@ -74,7 +72,6 @@ object GraftConfig {
         case "list-cap" => c.copy(listCap = v.toInt)
         case "max-band-size" => c.copy(maxBandSize = v.toInt)
         case "broadcast-name-map-max" => c.copy(broadcastNameMapMax = v.toLong)
-        case "broadcast-embedding-max" => c.copy(broadcastEmbeddingMax = v.toLong)
         case "cc-local-max" => c.copy(ccLocalSolveMax = v.toLong)
         case other =>
           throw new IllegalArgumentException(s"unknown flag --$other")
@@ -97,7 +94,6 @@ object GraftConfig {
       require(v > 0, s"--$n must be positive: $v")
     for ((n, v) <- Seq(
         "broadcast-name-map-max" -> cfg.broadcastNameMapMax,
-        "broadcast-embedding-max" -> cfg.broadcastEmbeddingMax,
         "cc-local-max" -> cfg.ccLocalSolveMax))
       require(v >= 0, s"--$n must be non-negative: $v")
     // joint constraint: the banding consumes bands x rows minhash

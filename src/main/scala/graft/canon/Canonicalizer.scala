@@ -28,16 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Canonicalizer {
 
-  // Tuning knobs live in graft.GraftConfig (the typed flags surface —
-  // reference framework/config.py); these forwards keep the historical
-  // names usable as the documented defaults.
-  val MergeThreshold: Double = graft.GraftConfig.default.mergeThreshold
-  val Salts: Int = graft.GraftConfig.default.salts
-  val ListCap: Int = graft.GraftConfig.default.listCap
-  /** Max distinct members per LSH band key before the band is dropped
-    * as pathological (quadratic join cost, ~no similarity signal). */
-  val MaxBandSize: Int = graft.GraftConfig.default.maxBandSize
-
   /** Decoration suffixes from the reference clean prompt. */
   private val decorations = Seq("装置", "产品", "类型", "某某", "一种")
 
@@ -76,9 +66,11 @@ object Canonicalizer {
     * construction FOR THOSE pairs. Non-identical keys can also pass the
     * cosine-0.95 merge gate (hashed-bucket collisions inflate cosine
     * above raw n-gram overlap); for those the detection probability is
-    * the banding curve below (~0.95 at J = 0.8) — an empirically
-    * validated approximation, not a guarantee: merges were measured
-    * bit-identical across both bandings at 1M and 4M pages, not proved.
+    * the banding curve below (~0.95 at J = 0.8). Measured: CanonicalizerSpec
+    * gates pair completeness = 1.0 against all-pairs cosine over a
+    * 150-page vocabulary, but its 32 gate-clearing pairs all share
+    * embedding keys; for non-identical keys the evidence is the curve
+    * and merges bit-identical across both bandings at 1M and 4M pages.
     * Rows = 8 (not the doc-dedup default 4)
     * suppresses false candidates by ~J^4 per band: at a web-scale
     * vocabulary the Zipf head is dense with structurally-similar code
@@ -104,25 +96,10 @@ object Canonicalizer {
     *    n_mentions, aliases, descriptions, source_chunks, component_id
     *  - nameMap: entity_name (raw) -> (name_key, canonical_id)
     */
-  private def timed[A](n: String)(f: => A): A = {
-    if (sys.env.contains("GRAFT_KG_STAGE_TIMES")) {
-      val s = System.nanoTime()
-      val x = f
-      System.err.println(f"[canon $n] ${(System.nanoTime() - s) / 1e9}%.2f s")
-      x
-    } else f
-  }
-
-  /** Debug-only action (no-op unless GRAFT_KG_STAGE_TIMES is set). */
-  private def probe(n: String)(f: => Any): Unit =
-    if (sys.env.contains("GRAFT_KG_STAGE_TIMES")) timed(n)(f)
-
   def canonicalize(mentions: DataFrame,
       cfg: graft.GraftConfig = graft.GraftConfig.default)
       : (DataFrame, DataFrame) = {
     val spark = mentions.sparkSession
-    // local shadows: the method body reads its knobs from cfg (the
-    // object-level constants remain as the documented defaults)
     val (mergeThreshold, salts) = (cfg.mergeThreshold, cfg.salts)
     val (listCap, maxBandSize) = (cfg.listCap, cfg.maxBandSize)
 
@@ -203,10 +180,6 @@ object Canonicalizer {
     val rawKeys = names
       .select(col("name_key"), explode(col("aliases")).as("entityName"))
 
-    probe("mentionsIn")(mentions.count())
-    probe("partialAgg")(partial.count())
-    probe("namesAgg")(names.count())
-
     // ---- G9 MinHash-LSH candidates + cosine verify ---------------------
     // hot-band guard (SURVEY.md §4.3): a band key shared by k names
     // contributes k^2/2 candidate pairs; beyond the cap the band carries
@@ -239,8 +212,6 @@ object Canonicalizer {
       .filter(col("src") < col("dst"))
       .select("src", "dst")
       .distinct()
-    probe("candPairs")(System.err.println(
-      s"[canon candPairs n] ${candPairs.count()} of ${names.count()} names"))
     // embedding attach for the exact verify. The embedding is a CHEAP
     // deterministic function of display_name (one hash-fold per
     // character), so the verify needs only a (name_key, display_name)
@@ -255,10 +226,9 @@ object Canonicalizer {
     //  - web-scale vocabulary (above the budget): shuffle-join the
     //    (name_key, embedding) form as before — the embed UDF runs
     //    once per name per join side, still cheaper than shipping
-    //    every banded copy of the vector.
-    // Wider rows (the 64-float eager-embedding variant) kept their own
-    // byte-derived budget in cfg.broadcastEmbeddingMax; the narrow
-    // display map uses the name-map cap.
+    //    every banded copy of the vector. A 64-float embedding row is
+    //    wider than a display-map row, so above the display map's cap
+    //    the embedding lookup never broadcasts.
     // Both endpoint attaches reference ONE un-renamed lookup subtree and
     // join with explicit conditions, so ReuseExchange builds/ships the
     // broadcast (or the shuffle of the lookup side) ONCE per run — the
@@ -277,11 +247,8 @@ object Canonicalizer {
           .withColumn("ea", embedUdf(col("da")))
           .withColumn("eb", embedUdf(col("db")))
       } else {
-        val embs0 = names.select(col("name_key"),
+        val embs = names.select(col("name_key"),
           embedUdf(col("display_name")).as("embedding"))
-        val embs =
-          if (nNames <= cfg.broadcastEmbeddingMax) broadcast(embs0)
-          else embs0
         candPairs
           .join(embs, col("src") === col("name_key"))
           .withColumnRenamed("embedding", "ea").drop("name_key")
@@ -304,12 +271,12 @@ object Canonicalizer {
     // ---- G10 connected components --------------------------------------
     // comps checkpointed for the same reason: entity agg + name map
     // both join through it
-    val comps = timed("cc")(graft.pipeline.Jobs.named(spark, "canon: connected components (G10)") {
+    val comps = graft.pipeline.Jobs.named(spark, "canon: connected components (G10)") {
       ConnectedComponents.runWithVertices(
         verified, names.select(col("name_key").as("id")),
         localSolveMax = cfg.ccLocalSolveMax)
         .localCheckpoint(true)
-    })
+    }
 
     // ---- G11 representative merge ---------------------------------------
     val withComp = names.join(
@@ -356,9 +323,7 @@ object Canonicalizer {
     * come from an equi-join on (table, key), verified by exact cosine,
     * then per-source top-k by window rank. Input: events with
     * (event_id, content); output (src_event, dst_event, rank). */
-  def eventKnn(events: DataFrame,
-      topK: Int = graft.GraftConfig.default.eventKnnTopK,
-      cutoff: Double = graft.GraftConfig.default.eventKnnCutoff): DataFrame = {
+  def eventKnn(events: DataFrame, topK: Int, cutoff: Double): DataFrame = {
     val bucketsUdf = udf((v: Seq[Float]) =>
       graft.lsh.HyperplaneLSH.tableKeys(v.toArray))
     // exact-duplicate contents collapse to one representative (min
@@ -409,20 +374,14 @@ object Canonicalizer {
     * tiny relative to the triple count (hot facts repeat across a large
     * fraction of the corpus), so a single-phase `collect_set(chunkId)`
     * would funnel millions of rows into a handful of groups with
-    * unbounded map-side set state — the same hot-key pattern as G12. */
-  /** Above this name-map row count the endpoint joins fall back to
-    * shuffle joins (a broadcast table must fit executor memory); below
-    * it the map broadcasts and the (much larger) triple stream never
-    * shuffles before the edge aggregate — the same dictionary-broadcast
-    * rule the extraction stage uses. ~5M rows ≈ low hundreds of MB. */
-  val BroadcastNameMapMax: Long = graft.GraftConfig.default.broadcastNameMapMax
-
-  /** Broadcast cap for the (name_key, embedding ARRAY<FLOAT>[64]) lookup:
-    * ~600 B/row with JVM overhead -> 100k rows ≈ 60 MB broadcast. Wide
-    * rows get their own byte-derived budget instead of a share of the
-    * name-map row cap. */
-  val BroadcastEmbeddingMax: Long = graft.GraftConfig.default.broadcastEmbeddingMax
-
+    * unbounded map-side set state — the same hot-key pattern as G12.
+    *
+    * Above `cfg.broadcastNameMapMax` name-map rows the endpoint joins
+    * fall back to shuffle joins (a broadcast table must fit executor
+    * memory); below it the map broadcasts and the (much larger) triple
+    * stream never shuffles before the edge aggregate — the same
+    * dictionary-broadcast rule the extraction stage uses. ~5M rows ≈
+    * low hundreds of MB. */
   def rewriteTriples(triples: DataFrame, nameMap: DataFrame,
       cfg: graft.GraftConfig = graft.GraftConfig.default): DataFrame = {
     val (listCap, salts) = (cfg.listCap, cfg.salts)

@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
+  /** Doc-dedup hot-band cap: its own decision, not the name banding's
+    * `GraftConfig.maxBandSize`, though both are 10000. */
+  private val MaxBandSize = 10000
+
   /** Exact duplicate groups: md5(text) -> group size + representative
     * (min doc_id = deterministic keeper). Scale: shuffle key is a hash,
     * perfectly uniform; map-side partial agg shrinks each group to one
@@ -152,14 +156,14 @@ object DedupOps {
         else MinHasher.bandKeys(MinHasher.signature(sh)).iterator.map(b => (id, b))
       }
     }.toDF("doc_id", "band")
-    // hot-band guard (same rationale as Canonicalizer.MaxBandSize): a
-    // band shared by k docs costs k^2/2 join rows with ~no signal.
+    // hot-band guard (MaxBandSize): a band shared by k docs costs
+    // k^2/2 join rows with ~no signal.
     // Same one-shuffle member-collect shape as the canonicalizer's name
     // banding: group each band to its doc list (NULL = over the cap ->
     // dropped), stream pairs from two Generates.
     val bandDocs = banded.groupBy("band")
       .agg(graft.canon.BoundedAgg.allOrNothingLong(col("doc_id"),
-        graft.canon.Canonicalizer.MaxBandSize).as("ds"))
+        MaxBandSize).as("ds"))
       .filter(col("ds").isNotNull)
       .select("ds")
     val cands = bandDocs

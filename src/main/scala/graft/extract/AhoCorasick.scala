@@ -66,16 +66,6 @@ final class AhoCorasick private (
     }
     bits
   }
-
-  /** Distinct pattern ids found anywhere in `text` (compatibility
-    * wrapper over [[matchedBits]]). */
-  def matchedIds(text: String): collection.Set[Int] = {
-    val bits = matchedBits(text)
-    val hits = mutable.Set.empty[Int]
-    var id = bits.nextSetBit(0)
-    while (id >= 0) { hits += id; id = bits.nextSetBit(id + 1) }
-    hits
-  }
 }
 
 object AhoCorasick {

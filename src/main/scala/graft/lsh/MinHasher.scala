@@ -55,13 +55,6 @@ object MinHasher {
     keys
   }
 
-  /** Estimated Jaccard from two signatures. */
-  def estimate(a: Array[Long], b: Array[Long]): Double = {
-    var eq = 0; var i = 0
-    while (i < NumHashes) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / NumHashes
-  }
-
   /** Word n-gram shingles of a text (distinct). */
   def wordShingles(text: String, n: Int = 3): Set[String] = {
     val toks = text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)

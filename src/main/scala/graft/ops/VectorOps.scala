@@ -121,19 +121,6 @@ object VectorOps {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     }
 
-  /** Unpersist + drop this session's cached bucket indexes — for a
-    * long-lived driver cycling over many tables (the cache is otherwise
-    * bounded only by the number of distinct tables probed). */
-  def invalidateLshIndexCache(spark: SparkSession): Unit =
-    lshIndexCache.synchronized {
-      lshIndexCache.filterInPlace { case ((s, _), df) =>
-        if (s eq spark) {
-          try df.unpersist() catch { case scala.util.control.NonFatal(_) => }
-          false
-        } else true
-      }
-    }
-
   /** Durable form of the bucket index: written ONCE as a parquet table
     * PARTITIONED BY `bucket` (<= Tables * 2^BitsPerTable = 4096
     * partitions). A probe's `bucket IN (<= 16 keys)` then becomes a

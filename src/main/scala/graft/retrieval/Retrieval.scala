@@ -55,22 +55,6 @@ object DenseRetriever {
     * on the read path. */
   def queryVec(query: String): Seq[Float] =
     HashingEmbedder.embed(query.toLowerCase).toSeq
-
-  /** Scale path: the same scoring served by the LSH bucket index
-    * instead of a full scan (drop-in for ANN workloads where exact
-    * top-k is not required; see graft.ops.VectorOps.annTopKLsh). */
-  def lshRetriever(indexDir: Option[String] = None): Retriever = new Retriever {
-    val name = "dense_lsh"
-    // default: the session-cached index (materialized once per
-    // (session, table)); pass indexDir to probe a durable
-    // bucket-partitioned index written by writeLshBucketIndex —
-    // the cross-job serving shape (partition-pruned scan, no UDF)
-    def retrieve(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
-      graft.ops.VectorOps.lshTopKForVector(spark, sfDir,
-        queryVec(query).toArray, k,
-        index = indexDir.map(d =>
-          graft.ops.VectorOps.readLshBucketIndex(spark, d)))
-  }
 }
 
 object Retrieval {

@@ -16,17 +16,9 @@ class GraftConfigSpec extends SparkSpec {
     assert(c.nameBands == 16 && c.nameRows == 8)
     assert(c.salts == 16 && c.listCap == 64 && c.maxBandSize == 10000)
     assert(c.broadcastNameMapMax == 5000000L)
-    assert(c.broadcastEmbeddingMax == 100000L)
     // env-aware default: tests run without GRAFT_CC_LOCAL_MAX
     if (!sys.env.contains("GRAFT_CC_LOCAL_MAX"))
       assert(c.ccLocalSolveMax == 500000L)
-    // the historical object-level constants forward to the same values
-    assert(Canonicalizer.MergeThreshold == c.mergeThreshold)
-    assert(Canonicalizer.Salts == c.salts)
-    assert(Canonicalizer.ListCap == c.listCap)
-    assert(Canonicalizer.MaxBandSize == c.maxBandSize)
-    assert(Canonicalizer.BroadcastNameMapMax == c.broadcastNameMapMax)
-    assert(Canonicalizer.BroadcastEmbeddingMax == c.broadcastEmbeddingMax)
   }
 
   test("fromArgs parses every flag and passes positionals through") {
@@ -34,9 +26,8 @@ class GraftConfigSpec extends SparkSpec {
       "4000000", "--merge-threshold=0.97", "/tmp/out", "--event-knn-topk=5",
       "--event-knn-cutoff=0.9", "--name-bands=32", "--name-rows=4",
       "--salts=8", "--list-cap=16", "--max-band-size=500",
-      "--broadcast-name-map-max=1000", "--broadcast-embedding-max=2000",
-      "--cc-local-max=0", "resume"))
-    assert(c == GraftConfig(0.97, 5, 0.9, 32, 4, 8, 16, 500, 1000L, 2000L, 0L))
+      "--broadcast-name-map-max=1000", "--cc-local-max=0", "resume"))
+    assert(c == GraftConfig(0.97, 5, 0.9, 32, 4, 8, 16, 500, 1000L, 0L))
     assert(rest == Seq("4000000", "/tmp/out", "resume"))
   }
 

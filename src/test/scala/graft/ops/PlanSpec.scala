@@ -101,12 +101,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dense_lsh probe reuses the cached bucket index: no per-query corpus UDF") {
-    // materialize once (the retriever default), then the probe plan must
+    // materialize once (the probe default), then the probe plan must
     // be a filter on `bucket` over the cached index — not a fresh
     // embeddings scan + per-row LSH UDF (round-3 verdict #2)
     VectorOps.lshBucketIndexCached(spark, sf0001).count() // warm the cache
-    val df = graft.retrieval.DenseRetriever.lshRetriever()
-      .retrieve(spark, sf0001, "spark join vector", 10)
+    val df = VectorOps.lshTopKForVector(spark, sf0001,
+      graft.retrieval.DenseRetriever.queryVec("spark join vector").toArray, 10)
     val p = plan(df)
     assert(p.contains("InMemoryTableScan"), p)
     assert(p.toLowerCase.contains("bucket"), p)
@@ -164,10 +164,6 @@ class PlanSpec extends SparkSpec {
         index = Some(VectorOps.readLshBucketIndex(spark, dir)))
       val viaCache = VectorOps.lshTopKForVector(spark, sf0001, qv, 10)
       assert(viaIdx.collect().toSeq == viaCache.collect().toSeq)
-      // the retriever surface reaches the same durable index
-      val viaRetriever = graft.retrieval.DenseRetriever.lshRetriever(Some(dir))
-        .retrieve(spark, sf0001, "spark join vector", 10)
-      assert(viaRetriever.collect().toSeq == viaIdx.collect().toSeq)
       val scans = fileScans(viaIdx.queryExecution.executedPlan)
       assert(scans.nonEmpty, plan(viaIdx))
       scans.foreach { s =>

@@ -256,6 +256,40 @@ class PipelineSpec extends SparkSpec {
       "matching-flag resume recomputed the canonicalization tail")
   }
 
+  test("a merge-threshold retune resume equals a fresh run at the new threshold") {
+    // the resume perfbench measures: default run, then a retune resume
+    // that reuses the front and recomputes the cfg-stamped tail — it
+    // must commit exactly what an uninterrupted run at 0.999 commits
+    val retune = graft.GraftConfig.default.copy(mergeThreshold = 0.999)
+    val resumed = Files.createTempDirectory("kg_retune").toString
+    KGJob.run(spark, 40, resumed, resume = false, partitions = 2)
+    KGJob.run(spark, 40, resumed, resume = true, partitions = 2, cfg = retune)
+    val fresh = Files.createTempDirectory("kg_retune_fresh").toString
+    KGJob.run(spark, 40, fresh, resume = false, partitions = 2, cfg = retune)
+    for (t <- Seq("entities", "name_map", "edges", "participates", "event_similar")) {
+      val a = sortedRows(spark.read.parquet(s"$resumed/$t"))
+      assert(a.nonEmpty, s"table $t is empty")
+      assert(a == sortedRows(spark.read.parquet(s"$fresh/$t")),
+        s"table $t differs between the retune resume and a fresh run")
+    }
+  }
+
+  test("output-neutral knobs leave the KG unchanged") {
+    // salts, the broadcast cap and the CC local-solve gate pick a
+    // physical strategy only: each must give the default rows
+    val base = KGPipeline.run(spark, 150, partitions = 4)
+    val want = Seq(base.entities, base.nameMap, base.edges).map(sortedRows)
+    val d = graft.GraftConfig.default
+    for ((knob, cfg) <- Seq("salts = 1" -> d.copy(salts = 1),
+        "broadcastNameMapMax = 0" -> d.copy(broadcastNameMapMax = 0L),
+        "ccLocalSolveMax = 0" -> d.copy(ccLocalSolveMax = 0L))) {
+      val r = KGPipeline.run(spark, 150, partitions = 4, cfg = cfg)
+      val got = Seq(r.entities, r.nameMap, r.edges).map(sortedRows)
+      for ((t, (g, w)) <- Seq("entities", "nameMap", "edges").zip(got.zip(want)))
+        assert(g == w, s"$t differs under $knob")
+    }
+  }
+
   test("canonicalization is a fixpoint: re-canonicalizing representatives is a no-op") {
     // if two representatives were still >= 0.95-similar they would have
     // been one component in round 1, so round 2 must produce singleton

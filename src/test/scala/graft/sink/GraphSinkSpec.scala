@@ -2,6 +2,10 @@ package graft.sink
 
 import graft.SparkSpec
 import graft.pipeline.KGPipeline
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 class GraphSinkSpec extends SparkSpec {
@@ -59,5 +63,31 @@ class GraphSinkSpec extends SparkSpec {
     GraphSink.deleteClass(spark, s"mockfs://$local", "Event")
     assert(!java.nio.file.Files.exists(local.resolve("nodes/label=Event")),
       "partition under the non-default scheme was not dropped")
+  }
+
+  test("integrity gates its id-set broadcasts on the run's config") {
+    // the integrity anti-joins are the only left-anti joins in the plan
+    def broadcastAntiJoins(p: SparkPlan): Int = p.collect {
+      case a: AdaptiveSparkPlanExec => broadcastAntiJoins(a.executedPlan)
+      case s: QueryStageExec => broadcastAntiJoins(s.plan)
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => 1
+    }.sum
+    // Spark's own size-based broadcast would pick every id set at this
+    // scale whatever the gate says; switched off, only the gate decides
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val gated = GraphSink.integrity(result, graft.GraftConfig.default)
+      val shuffled = GraphSink.integrity(result,
+        graft.GraftConfig.default.copy(broadcastNameMapMax = 0L))
+      val rows = gated.collect().map(_.toString).sorted.toSeq
+      assert(rows.size == 11)
+      assert(shuffled.collect().map(_.toString).sorted.toSeq == rows)
+      assert(broadcastAntiJoins(gated.queryExecution.executedPlan) > 0,
+        "the default cap broadcast no id set — the plan check is vacuous")
+      assert(broadcastAntiJoins(shuffled.queryExecution.executedPlan) == 0,
+        shuffled.queryExecution.executedPlan.toString)
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -1,14 +1,11 @@
 package graft.streaming
 
 import graft.SparkSpec
-import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 class StreamOpsSpec extends SparkSpec {
-
-  private def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
 
   test("streaming extract: exactly-once per distinct chunk across micro-batches") {
     import spark.implicits._
@@ -108,83 +105,5 @@ class StreamOpsSpec extends SparkSpec {
     assert(setOf(edges.select(eCols.head, eCols.tail: _*))
       == setOf(batch.edges.select(eCols.head, eCols.tail: _*)),
       "canonical edges diverge")
-  }
-
-  test("windowed counts over a memory stream match the batch aggregate") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Double)]
-    val events = input.toDF().toDF("ts", "event_type", "value")
-    val q = StreamOps.windowedCounts(events)
-      .writeStream.format("memory").queryName("wc")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val rows = Seq(
-        (ts(0), "click", 1.0), (ts(10), "click", 2.0), (ts(20), "view", 3.0),
-        (ts(65), "click", 4.0))
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      // advance the watermark far enough to close the first hour
-      input.addData((ts(300), "late", 0.0))
-      q.processAllAvailable()
-      val got = spark.table("wc")
-        .select("window_start", "event_type", "n_events", "sum_value")
-        .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-      val batch = rows.toDF("ts", "event_type", "value")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("s"))
-        .select(col("window.start"), col("event_type"), col("n"), col("s"))
-        .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-      // two-sided: (a) every closed window the batch aggregate expects
-      // was appended ("late" is the watermark-advancer, its window never
-      // closes); (b) every appended row matches the batch aggregate
-      // exactly — one-sided subset would let spurious or wrong-window
-      // stream rows pass unnoticed
-      assert(batch.filter(_._2 != "late").subsetOf(got),
-        s"closed windows must match batch semantics: got=$got batch=$batch")
-      assert(got.subsetOf(batch),
-        s"stream emitted rows absent from the batch aggregate: got=$got batch=$batch")
-      assert(got.exists(_._2 == "click"))
-    } finally q.stop()
-  }
-
-  test("watermarked dedup drops duplicate event ids within the horizon") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp)]
-    val events = input.toDF().toDF("event_id", "ts")
-    val q = StreamOps.dedupStream(events)
-      .writeStream.format("memory").queryName("dd")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData((1L, ts(0)), (1L, ts(1)), (2L, ts(2)), (2L, ts(2)), (3L, ts(3)))
-      q.processAllAvailable()
-      val ids = spark.table("dd").select("event_id")
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("sessionize accumulates per-user counts via mapGroupsWithState") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[StreamOps.Click]
-    val q = StreamOps.sessionize(input.toDS(), gapMs = 0L)
-      .writeStream.format("memory").queryName("sess")
-      .outputMode(OutputMode.Update).start()
-    try {
-      input.addData(StreamOps.Click(7L, ts(0)), StreamOps.Click(7L, ts(1)),
-        StreamOps.Click(8L, ts(0)))
-      q.processAllAvailable()
-      input.addData(StreamOps.Click(7L, ts(2)))
-      q.processAllAvailable()
-      val counts = spark.table("sess")
-        .groupBy("user_id").agg(max("n_events").as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(counts(7L) == 3L)
-      assert(counts(8L) == 1L)
-    } finally q.stop()
   }
 }

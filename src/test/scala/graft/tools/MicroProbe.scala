@@ -50,7 +50,7 @@ object MicroProbe {
     // phase splits inside extractAll, approximated via public pieces:
     // automaton scan alone
     val auto = graft.extract.AhoCorasick(kb.patterns)
-    t("automatonScan", 3) { norm.foreach { case (s, _) => auto.matchedIds(s) } }
+    t("automatonScan", 3) { norm.foreach { case (s, _) => auto.matchedBits(s) } }
     val codeRe = java.util.regex.Pattern.compile("(?i:KJ|XH|BJ|DZ)[-._/]?[0-9A-Za-z]{5}")
     val relRe = java.util.regex.Pattern.compile(
       "部件型号[:：]((?i:KJ|XH|BJ|DZ)[-._/]?[0-9A-Za-z]{5})，属于([^，。]{2,24}组件)。")
