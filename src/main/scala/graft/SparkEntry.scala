@@ -49,7 +49,7 @@ object SparkEntry {
     * JVM Datasets bound to the first session's dead SparkContext, and
     * TrieMap.getOrElseUpdate could build (and persist) the 100k-page
     * pipeline twice under a concurrent first probe (same discipline as
-    * VectorOps.lshIndexCache). */
+    * VectorOps.mmrFetchCache). */
   private val kgCache = scala.collection.mutable
     .Map.empty[(SparkSession, String, GraftConfig), graft.pipeline.KGPipeline.Result]
 
@@ -616,7 +616,7 @@ object SparkEntry {
     * (exactly the driver loop's (score, -id) maxBy). Double arithmetic
     * is identical on both sides: the dumps carry the very doubles the
     * loop consumed. */
-  private def mmrOracleSql(k: Int = 10): String = {
+  private def mmrOracleSql(k: Int): String = {
     // MATERIALIZED throughout: each sel_i references every prior step,
     // so DuckDB's default CTE INLINING would expand the tree ~2^k-fold
     // (measured: fd exhaustion surfacing as a bogus "No files found"

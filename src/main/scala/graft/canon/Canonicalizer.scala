@@ -2,7 +2,7 @@ package graft.canon
 
 import graft.embed.{CosineSimilarity, HashingEmbedder}
 import graft.lsh.MinHasher
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Entity canonicalization (SURVEY.md §2.4 G9-G12):

@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components over a DataFrame edge list via the
@@ -50,7 +50,6 @@ object ConnectedComponents {
   def run(edgesIn: DataFrame, maxIter: Int = 50,
       localSolveMax: Long = LocalSolveMax): DataFrame = {
     val spark = edgesIn.sparkSession
-    import spark.implicits._
 
     // NO distinct here: `min`/`least` aggregates are multiplicity-
     // insensitive and the one end-of-round distinct (in the small-star

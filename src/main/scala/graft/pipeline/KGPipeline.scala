@@ -4,7 +4,6 @@ import graft.canon.Canonicalizer
 import graft.chunk.MarkdownSplitter
 import graft.extract.TripleExtractor
 import graft.pages.{Page, PagesGenerator}
-import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -282,7 +281,7 @@ object KGPipeline {
         count(lit(1)).as("n_sources"))
   }
 
-  /** Full in-memory DAG (stage-checkpointed variant in [[Lineage]]). */
+  /** Full in-memory DAG (stage-checkpointed variant in [[KGJob]]). */
   final case class Result(
       pages: Dataset[Page],
       chunks: Dataset[ChunkRow],
@@ -296,6 +295,42 @@ object KGPipeline {
       eventSimilar: DataFrame,
       eventEdges: DataFrame,
       eventRels: DataFrame)
+
+  /** The KG DAG from the chunks extraction reads to the graph tables,
+    * built once: each named frame, in dependency order, passes through
+    * `stage`, and later frames read what it returned ([[runOnPages]]
+    * checkpoints the name map, [[KGJob]] commits every frame). Extraction
+    * and canonicalization are lazy, so a hook serving a committed stage
+    * never builds the extractor or runs the canonicalizer's jobs. */
+  final class Graph(chunks: Dataset[ChunkRow], cfg: graft.GraftConfig,
+      stage: String => (=> DataFrame) => DataFrame,
+      stageDir: Option[String] = None) {
+    lazy val extraction = extract(chunks.sparkSession, chunks, stageDir)
+    val mentions = stage("mentions")(extraction.mentions)
+    val triples = stage("triples")(extraction.triples)
+    val events = stage("events")(extraction.events)
+    val eventEdges = stage("event_edges")(KGPipeline.eventEdges(events, extraction.eventRels))
+    // chunkId in mentions/triples refers to the distinct chunk; re-join
+    // provenance (all urls containing the chunk) happens on demand
+    private lazy val canonical = Canonicalizer.canonicalize(
+      mentions.withColumnRenamed("chunk_id", "chunkId"), cfg)
+    val entities = stage("entities")(canonical._1)
+    val nameMap = stage("name_map")(canonical._2)
+    val edges = stage("edges")(Canonicalizer.rewriteTriples(
+      triples.withColumnRenamed("chunk_id", "chunkId"), nameMap, cfg))
+    // G7 PARTICIPATES_IN: explode participants, resolve through the
+    // canonical map (inner join drops names killed by the filters —
+    // Cypher MATCH semantics, reference event_graphrag_neo4j.py:479-558)
+    val participates = stage("participates") {
+      events.select(col("event_id"), explode(col("participants")).as("entity_name"))
+        .join(nameMap, "entity_name").select(col("canonical_id"), col("event_id"))
+        .distinct()
+    }
+    // G13 event disambiguation: hyperplane-LSH candidates over content
+    // embeddings, cosine >= cutoff (default 0.85), top-k per event
+    val eventSimilar = stage("event_similar")(
+      Canonicalizer.eventKnn(events, cfg.eventKnnTopK, cfg.eventKnnCutoff))
+  }
 
   def run(spark: SparkSession, nPages: Long, partitions: Int = 32,
       cfg: graft.GraftConfig = graft.GraftConfig.default): Result =
@@ -315,36 +350,17 @@ object KGPipeline {
   def runOnPages(spark: SparkSession, pages: Dataset[Page],
       fromHtml: Boolean = true, stageDir: Option[String] = None,
       cfg: graft.GraftConfig = graft.GraftConfig.default): Result = {
-    import spark.implicits._
-    val chunks = chunk(pages, fromHtml)
-    val ex = extract(spark, chunks, stageDir)
-    val (mentions, triples, events) = (ex.mentions, ex.triples, ex.events)
-    val evEdges = eventEdges(events, ex.eventRels)
-    // chunkId in mentions/triples refers to the distinct chunk; re-join
-    // provenance (all urls containing the chunk) happens on demand
-    val (entities, nameMap0) = Canonicalizer.canonicalize(
-      mentions.withColumnRenamed("chunk_id", "chunkId"), cfg)
     // nameMap feeds three joins (subj/obj endpoint rewrite +
-    // participant resolution) — persist so the canonicalization subtree
-    // computes once per action
-    val nameMap = Jobs.named(spark, "canon: nameMap checkpoint") {
-      nameMap0.localCheckpoint(true)
-    }
-    val edges = Canonicalizer.rewriteTriples(
-      triples.withColumnRenamed("chunk_id", "chunkId"), nameMap, cfg)
-    // G7 PARTICIPATES_IN: explode participants, resolve through the
-    // canonical map (inner join drops names killed by the filters —
-    // Cypher MATCH semantics, reference event_graphrag_neo4j.py:479-558)
-    val participates = events
-      .select(col("event_id"), explode(col("participants")).as("entity_name"))
-      .join(nameMap, "entity_name")
-      .select(col("canonical_id"), col("event_id"))
-      .distinct()
-    // G13 event disambiguation: hyperplane-LSH candidates over content
-    // embeddings, cosine >= cutoff (default 0.85), top-k per event
-    val eventSimilar = Canonicalizer.eventKnn(events,
-      cfg.eventKnnTopK, cfg.eventKnnCutoff)
-    Result(pages, chunks, mentions, triples, events, entities, nameMap,
-      edges, participates, eventSimilar, evEdges, ex.eventRels)
+    // participant resolution) — checkpoint it so the canonicalization
+    // subtree computes once per action; every other frame stays a plan
+    def inMemory(name: String)(df: => DataFrame): DataFrame =
+      if (name == "name_map")
+        Jobs.named(spark, "canon: nameMap checkpoint")(df.localCheckpoint(true))
+      else df
+    val chunks = chunk(pages, fromHtml)
+    val g = new Graph(chunks, cfg, inMemory, stageDir)
+    Result(pages, chunks, g.mentions, g.triples, g.events, g.entities,
+      g.nameMap, g.edges, g.participates, g.eventSimilar, g.eventEdges,
+      g.extraction.eventRels)
   }
 }

@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -252,11 +251,22 @@ object KGJob {
     val nPages = positional.headOption.map(_.toLong).getOrElse(1000L)
     val outDir = if (positional.length > 1) positional(1) else "/tmp/graft_kg"
     val resume = positional.contains("resume")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val t0 = System.nanoTime()
+    val result = run(spark, nPages, outDir, resume, cfg = cfg)
+    val sec = (System.nanoTime() - t0) / 1e9
+    result.foreach { case (k, v) => println(f"[kg] $k%-10s $v%,d rows") }
+    println(f"[kg] wall ${sec}%.1f s")
+    spark.stop()
+  }
+
+  /** The job's local session on `cpus` cores (shuffle partitions =
+    * cores); the test suites run on it too. */
+  def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-kg")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -268,12 +278,7 @@ object KGJob {
         "4000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    val result = run(spark, nPages, outDir, resume, cfg = cfg)
-    val sec = (System.nanoTime() - t0) / 1e9
-    result.foreach { case (k, v) => println(f"[kg] $k%-10s $v%,d rows") }
-    println(f"[kg] wall ${sec}%.1f s")
-    spark.stop()
+    spark
   }
 
   /** Stage-checkpointed pipeline; returns stage -> row count, as the
@@ -292,6 +297,11 @@ object KGJob {
     val lin = new Lineage(spark, outDir, s"run_$nPages", resume,
       jobFingerprint = nPages.toString)
     val cfgFp = cfg.toString
+    val tuned = Set("entities", "name_map", "edges", "participates", "event_similar")
+    // requires name_key: a resume over an outDir committed before the
+    // name map carried it would otherwise reuse the 2-column table and
+    // break the alias-closure/entity-counts consumers downstream
+    val requires = Map("mentions" -> Seq("ord"), "name_map" -> Seq("name_key"))
 
     val pages = lin.stage("pages") {
       PagesGenerator.pages(spark, nPages, partitions).toDF()
@@ -305,38 +315,9 @@ object KGJob {
       // deterministically inside extract (min_by content_hash)
       chunks.dropDuplicates("content_hash")
     }
-    // lazy: when a resumed run finds both outputs committed, the
-    // upstream computation (incl. the eager CC fixpoint) never runs
-    lazy val extracted = KGPipeline.extract(spark,
-      distinct.as[KGPipeline.ChunkRow])
-    val mentions = lin.stage("mentions", requires = Seq("ord"))(extracted.mentions)
-    val triples = lin.stage("triples")(extracted.triples)
-    val events = lin.stage("events")(extracted.events)
-    lin.stage("event_edges") {
-      KGPipeline.eventEdges(events, extracted.eventRels)
-    }
-    lazy val cano = graft.canon.Canonicalizer.canonicalize(
-      mentions.withColumnRenamed("chunk_id", "chunkId"), cfg)
-    lin.stage("entities", fingerprint = cfgFp)(cano._1)
-    // requires name_key: a resume over an outDir committed before the
-    // name map carried it would otherwise reuse the 2-column table and
-    // break the alias-closure/entity-counts consumers downstream
-    val nameMap = lin.stage("name_map", requires = Seq("name_key"),
-      fingerprint = cfgFp)(cano._2)
-    lin.stage("edges", fingerprint = cfgFp) {
-      graft.canon.Canonicalizer.rewriteTriples(
-        triples.withColumnRenamed("chunk_id", "chunkId"), nameMap, cfg)
-    }
-    lin.stage("participates", fingerprint = cfgFp) {
-      events.select(col("event_id"), explode(col("participants")).as("entity_name"))
-        .join(nameMap, "entity_name")
-        .select(col("canonical_id"), col("event_id"))
-        .distinct()
-    }
-    lin.stage("event_similar", fingerprint = cfgFp) {
-      graft.canon.Canonicalizer.eventKnn(events,
-        cfg.eventKnnTopK, cfg.eventKnnCutoff)
-    }
+    new KGPipeline.Graph(distinct.as[KGPipeline.ChunkRow], cfg, name =>
+      lin.stage(name, requires.getOrElse(name, Nil),
+        if (tuned(name)) cfgFp else "")(_))
     Seq("pages", "chunks", "mentions", "triples", "events", "event_edges",
       "entities", "edges", "participates", "event_similar")
       .map(s => s -> lin.rows(s))

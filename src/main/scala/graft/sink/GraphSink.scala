@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   */
 object GraphSink {
 
-  /** Unified labeled node table from the pipeline result. */
-  def nodes(r: KGPipeline.Result): DataFrame = {
+  /** The node classes, each with its rows of the unified node table. */
+  private def nodeClasses(r: KGPipeline.Result): Seq[(String, DataFrame)] = {
     // min_by(content_hash) survivor: the SAME rule extract() uses for
     // 8-hex chunk_id collisions, so the Chunk node's text is always the
     // content whose extraction results are stored under that id (a
@@ -41,44 +41,49 @@ object GraphSink {
       .select(lit("Entity").as("label"), col("canonical_id").as("node_id"),
         col("entity_name").as("name"),
         concat_ws(" | ", col("descriptions")).as("content"))
-    chunkNodes.unionByName(eventNodes).unionByName(entityNodes)
+    Seq("Chunk" -> chunkNodes, "Event" -> eventNodes, "Entity" -> entityNodes)
   }
 
-  /** Unified typed edge table: the five reference relationship classes. */
-  def edges(r: KGPipeline.Result): DataFrame = {
-    val entityRel = r.edges.select(
+  /** The edge classes, each with its rows of the unified edge table:
+    * the reference relationship classes. */
+  private def edgeClasses(r: KGPipeline.Result): Seq[(String, DataFrame)] = Seq(
+    "ENTITY_RELATION" -> r.edges.select(
       lit("ENTITY_RELATION").as("edge_type"), col("pred"),
       col("subj_id").as("src"), col("obj_id").as("dst"),
-      lit(0).as("rank"), col("n_sources"))
-    val contains = r.events.select(
+      lit(0).as("rank"), col("n_sources")),
+    "CONTAINS" -> r.events.select(
       lit("CONTAINS").as("edge_type"), lit(null: String).as("pred"),
       col("chunk_id").as("src"), col("event_id").as("dst"),
-      lit(0).as("rank"), lit(1L).as("n_sources"))
-    val mentions = r.mentions
+      lit(0).as("rank"), lit(1L).as("n_sources")),
+    "MENTIONS" -> r.mentions
       .join(r.nameMap, r.mentions("entityName") === r.nameMap("entity_name"))
       .select(lit("MENTIONS").as("edge_type"), lit(null: String).as("pred"),
         col("chunk_id").as("src"), col("canonical_id").as("dst"),
         lit(0).as("rank"), lit(1L).as("n_sources"))
-      .dropDuplicates("src", "dst")
-    val participates = r.participates.select(
+      .dropDuplicates("src", "dst"),
+    "PARTICIPATES_IN" -> r.participates.select(
       lit("PARTICIPATES_IN").as("edge_type"), lit(null: String).as("pred"),
       col("canonical_id").as("src"), col("event_id").as("dst"),
-      lit(0).as("rank"), lit(1L).as("n_sources"))
-    val similar = r.eventSimilar.select(
+      lit(0).as("rank"), lit(1L).as("n_sources")),
+    "SIMILAR_TO" -> r.eventSimilar.select(
       lit("SIMILAR_TO").as("edge_type"), lit(null: String).as("pred"),
       col("src_event").as("src"), col("dst_event").as("dst"),
-      col("rank"), lit(1L).as("n_sources"))
+      col("rank"), lit(1L).as("n_sources")),
     // G6: typed event->event logic edges (EVENT_RELATION {type},
     // reference event_graphrag_neo4j.py:428-477)
-    val eventRel = r.eventEdges.select(
+    "EVENT_RELATION" -> r.eventEdges.select(
       lit("EVENT_RELATION").as("edge_type"),
       col("relation_type").as("pred"),
       col("head_id").as("src"), col("tail_id").as("dst"),
-      lit(0).as("rank"), col("n_sources"))
-    entityRel.unionByName(contains).unionByName(mentions)
-      .unionByName(participates).unionByName(similar)
-      .unionByName(eventRel)
-  }
+      lit(0).as("rank"), col("n_sources")))
+
+  /** Unified labeled node table from the pipeline result. */
+  def nodes(r: KGPipeline.Result): DataFrame =
+    nodeClasses(r).map(_._2).reduce(_.unionByName(_))
+
+  /** Unified typed edge table: the reference relationship classes. */
+  def edges(r: KGPipeline.Result): DataFrame =
+    edgeClasses(r).map(_._2).reduce(_.unionByName(_))
 
   /** Write both tables partitioned by class (bulk write — the
     * set-semantics dedup already happened upstream, so no MERGE). */
@@ -93,34 +98,19 @@ object GraphSink {
     * (reference event_graphrag_neo4j.py:560-576 runs 13 count queries;
     * one grouped aggregate replaces them). */
   def stats(r: KGPipeline.Result): DataFrame = {
-    // Counts computed WITHOUT materializing the node/edge payload
-    // columns: the former nodes()/edges() group-counts shuffled the full
-    // chunk contents and six-way edge union just to count rows per
-    // class (guide §2.3 — shuffle keys, not payloads). Each aggregate
-    // below is by construction the row count of the corresponding
-    // nodes()/edges() class: Chunk nodes = one row per distinct
-    // chunk_id, MENTIONS = distinct (chunk, canonical) through the name
-    // map, every other class maps 1:1 onto its source frame. The
-    // count > 0 filter reproduces the old groupBy semantics exactly (an
-    // empty class emitted no row, not a zero row).
-    def cnt(kind: String, cls: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("count"))
-        .select(lit(kind).as("kind"), lit(cls).as("class"), col("count"))
-    val chunkIds = r.chunks.toDF().select("chunk_id").distinct()
-    val mentionsDst = r.mentions
-      .join(r.nameMap, r.mentions("entityName") === r.nameMap("entity_name"))
-      .select(col("chunk_id"), col("canonical_id")).distinct()
-    Seq(
-      cnt("node", "Chunk", chunkIds),
-      cnt("node", "Event", r.events),
-      cnt("node", "Entity", r.entities),
-      cnt("edge", "ENTITY_RELATION", r.edges),
-      cnt("edge", "CONTAINS", r.events),
-      cnt("edge", "MENTIONS", mentionsDst),
-      cnt("edge", "PARTICIPATES_IN", r.participates),
-      cnt("edge", "SIMILAR_TO", r.eventSimilar),
-      cnt("edge", "EVENT_RELATION", r.eventEdges)
-    ).reduce(_.unionByName(_)).filter(col("count") > 0)
+    // Each class's own frame is counted, so no payload column is
+    // materialized: column pruning drops the node texts and the
+    // edge/node projections a count never reads, and no six-way union
+    // shuffles (guide §2.3 — shuffle keys, not payloads). The count > 0
+    // filter keeps the groupBy semantics of counting the union (an empty
+    // class emits no row, not a zero row).
+    def counts(kind: String, classes: Seq[(String, DataFrame)]): Seq[DataFrame] =
+      classes.map { case (cls, df) =>
+        df.agg(count(lit(1)).as("count"))
+          .select(lit(kind).as("kind"), lit(cls).as("class"), col("count"))
+      }
+    (counts("node", nodeClasses(r)) ++ counts("edge", edgeClasses(r)))
+      .reduce(_.unionByName(_)).filter(col("count") > 0)
   }
 
   /** Referential-integrity gate over the whole graph: every edge

@@ -1,7 +1,6 @@
 package graft.retrieval
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class RetrievalSpec extends SparkSpec {
 
@@ -84,7 +83,6 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("rerank stub: top-k by deterministic score over batched partitions") {
-    import spark.implicits._
     val cands = spark.range(0, 50).toDF("doc_id")
     val out = Retrieval.rerank(spark, sf0001, "spark join vector", cands, k = 10)
       .collect()
@@ -97,7 +95,6 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("rerank accepts a custom RerankScorer without touching query code") {
-    import spark.implicits._
     // a deployment-style scorer: rank = doc_id descending
     object ByIdScorer extends RerankScorer {
       def scoreBatch(query: String, batch: Seq[(Long, String)]): Seq[(Long, Double)] =

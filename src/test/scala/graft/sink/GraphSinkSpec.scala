@@ -3,6 +3,7 @@ package graft.sink
 import graft.SparkSpec
 import graft.pipeline.KGPipeline
 import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -89,5 +90,21 @@ class GraphSinkSpec extends SparkSpec {
       assert(broadcastAntiJoins(shuffled.queryExecution.executedPlan) == 0,
         shuffled.queryExecution.executedPlan.toString)
     } finally spark.conf.set(key, prev)
+  }
+
+  test("stats counts each class without projecting a payload column") {
+    // counting the node/edge class frames must prune the texts they
+    // carry: no projection or aggregate outputs a payload column (a
+    // filter passes its relation's columns through; only projections
+    // choose them)
+    val payload = Set("content", "descriptions", "header_name")
+    def payloadOutputs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.optimizedPlan.collect {
+        case p @ (_: Project | _: Aggregate) => p.output.map(_.name).filter(payload)
+      }.flatten
+    assert(payloadOutputs(GraphSink.nodes(result)).nonEmpty,
+      "the node table projects no payload — the check is vacuous")
+    val stats = GraphSink.stats(result)
+    assert(payloadOutputs(stats).isEmpty, stats.queryExecution.optimizedPlan.toString)
   }
 }

@@ -12,7 +12,7 @@ object MicroProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 3000
     val pages = (0 until n).map(i => PagesGenerator.page(i.toLong))
-    def t[A](name: String, reps: Int = 1)(f: => A): A = {
+    def t[A](name: String, reps: Int)(f: => A): A = {
       var x: A = null.asInstanceOf[A]
       val s = System.nanoTime()
       var i = 0
