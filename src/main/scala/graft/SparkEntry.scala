@@ -1,5 +1,6 @@
 package graft
 
+import graft.sink.GraphSink.checkCount
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -358,13 +359,6 @@ object SparkEntry {
     (rows ++ rows.map { case (n, v) => (n + "_is_zero", v) }).toSeq
       .toDF("check_name", "violations")
   }
-
-  /** One (check_name, violations) count row — shared by every invariant
-    * check builder below so the check-row shape cannot drift between
-    * them (and stays aligned with the oracle SQL's SELECT shape). */
-  private def checkCount(name: String, df: DataFrame): DataFrame =
-    df.agg(count(lit(1)).as("violations"))
-      .select(lit(name).as("check_name"), col("violations"))
 
   /** The oracle-side twin rows: one literal-zero row per check name. */
   private def zeroAnchorSql(names: Seq[String]): String =

@@ -13,7 +13,6 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame = table(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")

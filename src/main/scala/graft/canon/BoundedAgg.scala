@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
+import scala.reflect.runtime.universe.TypeTag
 
 /** Bounded-state distinct-min accumulators: the smallest `cap` distinct
   * values of a group, with O(cap) aggregation state per group.
@@ -64,61 +65,37 @@ object BoundedAgg {
   /** All-or-nothing member collector for the LSH hot-band guard: the
     * complete member list of a group when its cardinality is <= cap,
     * NULL once it overflows (state stops growing at cap+1 — a 10^7-key
-    * degenerate band costs O(cap) state, not O(band)).
+    * degenerate band costs O(cap) state, not O(band)). NULL inputs are
+    * skipped.
     *
     * PRECONDITION: the aggregated values are distinct within each group
-    * (true for (band, name_key) rows — one row per name per band by
-    * construction). Overflow = pure cardinality, so the verdict is
-    * deterministic under any partitioning; member order is arbitrary
-    * (callers pair + distinct, so row order never surfaces).
-    *
-    * Replaces the former count-agg + join-back + self-join guard shape:
-    * ONE shuffle of the banded rows instead of three, with the k^2 pair
-    * expansion streamed by two Generate operators instead of a join. */
-  final class AllOrNothing(cap: Int)
-      extends Aggregator[String, (List[String], Long), Seq[String]] {
-    def zero: (List[String], Long) = (Nil, 0L)
-    def reduce(b: (List[String], Long), a: String): (List[String], Long) =
+    * (true for (band, name_key) and (band, doc_id) rows — one row per
+    * member per band by construction). Overflow = pure cardinality, so
+    * the verdict is deterministic under any partitioning; member order
+    * is arbitrary (callers pair through `graft.lsh.Blocking.pairs`, so
+    * row order never surfaces). */
+  final class AllOrNothing[T: TypeTag](cap: Int)
+      extends Aggregator[T, (List[T], Long), Seq[T]] {
+    def zero: (List[T], Long) = (Nil, 0L)
+    def reduce(b: (List[T], Long), a: T): (List[T], Long) =
       if (a == null) b
       else if (b._2 >= cap + 1L) (b._1, b._2 + 1) // overflowed: count only
       else (a :: b._1, b._2 + 1)
-    def merge(a: (List[String], Long), b: (List[String], Long)): (List[String], Long) = {
+    def merge(a: (List[T], Long), b: (List[T], Long)): (List[T], Long) = {
       val n = a._2 + b._2
       if (n > cap) (Nil, n) // overflow verdict is cardinality-only
       else (b._1 ::: a._1, n)
     }
-    def finish(r: (List[String], Long)): Seq[String] =
+    def finish(r: (List[T], Long)): Seq[T] =
       if (r._2 > cap) null else r._1
-    def bufferEncoder = ExpressionEncoder[(List[String], Long)]()
-    def outputEncoder = ExpressionEncoder[Seq[String]]()
+    def bufferEncoder = ExpressionEncoder[(List[T], Long)]()
+    def outputEncoder = ExpressionEncoder[Seq[T]]()
   }
 
   /** Column form: every member if the group has <= cap values, else
     * NULL (see [[AllOrNothing]]). */
-  def allOrNothing(c: Column, cap: Int): Column =
-    udaf(new AllOrNothing(cap), Encoders.STRING).apply(c)
-
-  /** [[AllOrNothing]] over Long ids (doc ids in the dedup paths). */
-  final class AllOrNothingLong(cap: Int)
-      extends Aggregator[Long, (List[Long], Long), Seq[Long]] {
-    def zero: (List[Long], Long) = (Nil, 0L)
-    def reduce(b: (List[Long], Long), a: Long): (List[Long], Long) =
-      if (b._2 >= cap + 1L) (b._1, b._2 + 1)
-      else (a :: b._1, b._2 + 1)
-    def merge(a: (List[Long], Long), b: (List[Long], Long)): (List[Long], Long) = {
-      val n = a._2 + b._2
-      if (n > cap) (Nil, n)
-      else (b._1 ::: a._1, n)
-    }
-    def finish(r: (List[Long], Long)): Seq[Long] =
-      if (r._2 > cap) null else r._1
-    def bufferEncoder = ExpressionEncoder[(List[Long], Long)]()
-    def outputEncoder = ExpressionEncoder[Seq[Long]]()
-  }
-
-  /** Column form of [[AllOrNothingLong]]. */
-  def allOrNothingLong(c: Column, cap: Int): Column =
-    udaf(new AllOrNothingLong(cap), Encoders.scalaLong).apply(c)
+  def allOrNothing[T: TypeTag](c: Column, cap: Int): Column =
+    udaf(new AllOrNothing[T](cap), ExpressionEncoder[T]()).apply(c)
 
   /** Column form: smallest `cap` distinct strings of the group. */
   def distinctMin(c: Column, cap: Int): Column =

@@ -1,7 +1,7 @@
 package graft.canon
 
 import graft.embed.{CosineSimilarity, HashingEmbedder}
-import graft.lsh.MinHasher
+import graft.lsh.{Blocking, MinHasher}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -163,10 +163,9 @@ object Canonicalizer {
         .withColumn("display_name", col("first_w.norm_name"))
         .withColumn("entity_type", col("first_w.entityType"))
         .drop("first_w")
-        // bands materialize INSIDE the checkpoint: the banding self-join
-        // references this frame four times (two join sides + the
-        // band-size guard), and an uncheckpointed UDF would re-run the
-        // 128-minhash signature per reference. The embedding column
+        // bands materialize INSIDE the checkpoint, so the 128-minhash
+        // signature UDF runs once per name, in the checkpoint job,
+        // whatever later reads the frame. The embedding column
         // deliberately does NOT: it is a cheap deterministic function of
         // display_name, recomputed at the verify site (below), so the
         // checkpoint stays ~256 B/row slimmer.
@@ -188,30 +187,18 @@ object Canonicalizer {
     // cluster collides on many of the NameBands (= 16) bands — alias
     // variants on ALL of them — so dropping pathological bands costs
     // ~no recall.
-    // THIN band join: only (name_key, band) rides the self-join shuffle
+    // THIN banding: only (name_key, band) rides the band shuffle
     // — shipping the 64-float embeddings through the banding explode
     // multiplied the shuffle volume by ~10x at a 10^5-name vocabulary;
     // embeddings join back onto the (much smaller) candidate pair set
     // for the exact verify.
-    // ONE shuffle of the banded rows: group each band to its full
-    // member list through the all-or-nothing collector (NULL = band
-    // over the hot-band cap -> dropped, same verdict as the former
-    // count-filter), then stream the k^2 within-band pairs with two
-    // Generate operators. The former shape (count agg + join-back +
-    // a×b self-join) shuffled the 16x-exploded band rows three times
-    // and paid four latency-bound exchanges per run.
+    // Each band groups to its member list (NULL = band over the
+    // hot-band cap -> dropped); Blocking.pairs streams the pairs.
     val banded0 = names.select(col("name_key"),
         explode(col("bands")).as("band"))
     val bandMembers = banded0.groupBy("band")
-      .agg(BoundedAgg.allOrNothing(col("name_key"), maxBandSize).as("ms"))
-      .filter(col("ms").isNotNull)
-      .select("ms")
-    val candPairs = bandMembers
-      .select(explode(col("ms")).as("src"), col("ms"))
-      .select(col("src"), explode(col("ms")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .select("src", "dst")
-      .distinct()
+      .agg(BoundedAgg.allOrNothing[String](col("name_key"), maxBandSize).as("ms"))
+    val candPairs = Blocking.pairs(bandMembers, "src", "dst").distinct()
     // embedding attach for the exact verify. The embedding is a CHEAP
     // deterministic function of display_name (one hash-fold per
     // character), so the verify needs only a (name_key, display_name)

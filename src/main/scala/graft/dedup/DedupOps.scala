@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.lsh.{MinHasher, SimHasher}
+import graft.lsh.{Blocking, MinHasher, SimHasher}
 import graft.text.TextOps
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -86,32 +86,28 @@ object DedupOps {
     // and silently drop every shingle group). size >= 2 keeps the
     // lossless df >= 2 side of the old filter.
     val grouped = sh.groupBy("shingle")
-      .agg(graft.canon.BoundedAgg.allOrNothingLong(col("doc_id"),
-        math.min(maxDocFreq, Int.MaxValue.toLong).toInt).as("ds"))
-    val shingleDocs = grouped
-      .filter(col("ds").isNotNull && size(col("ds")) >= 2)
-      .select("ds")
-    // The pair stream out of the two Generates enumerates EVERY
-    // sub-cap-shingle co-occurrence of a pair exactly once (shingle sets
-    // are distinct per doc), so grouping it counts the sub-cap part of
-    // the intersection directly — the former shape re-derived the same
+      .agg(graft.canon.BoundedAgg.allOrNothing[Long](col("doc_id"),
+        math.min(maxDocFreq, Int.MaxValue.toLong).toInt).as("ms"))
+    // The Blocking.pairs stream enumerates EVERY sub-cap-shingle
+    // co-occurrence of a pair exactly once (shingle sets are distinct
+    // per doc), so grouping it counts the sub-cap part of the
+    // intersection directly — the former shape re-derived the same
     // counts by joining the distinct candidate set back onto the FULL
     // shingle table twice (measured ~59M join rows at sf0.1 for a 1.1M
     // pair candidate set; guide §2.3 "aggregate before you shuffle").
-    val interRare = shingleDocs
-      .select(explode(col("ds")).as("doc_a"), col("ds"))
-      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
+    val interRare = Blocking
+      .pairs(grouped.filter(col("ms").isNotNull && size(col("ms")) >= 2),
+        "doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("inter_rare"))
-    // Shingles the cap DROPPED (ds IS NULL) are missing from that
+    // Shingles the cap DROPPED (ms IS NULL) are missing from that
     // stream, yet the exact verify must count them too. Branch on their
     // existence DRIVER-SIDE (one cheap agg over the cached shingles):
     // in the common no-overflow case inter IS the grouped pair count —
     // no verify join at all; with overflows, fall back to the full
     // join-back verify (referencing interRare from a second lazy
     // subtree would re-execute its whole explode+agg per reference).
-    val hasHot = !grouped.filter(col("ds").isNull).isEmpty
+    val hasHot = !grouped.filter(col("ms").isNull).isEmpty
     val inter =
       if (!hasHot) interRare.withColumnRenamed("inter_rare", "inter")
       else {
@@ -157,21 +153,12 @@ object DedupOps {
       }
     }.toDF("doc_id", "band")
     // hot-band guard (MaxBandSize): a band shared by k docs costs
-    // k^2/2 join rows with ~no signal.
-    // Same one-shuffle member-collect shape as the canonicalizer's name
-    // banding: group each band to its doc list (NULL = over the cap ->
-    // dropped), stream pairs from two Generates.
+    // k^2/2 join rows with ~no signal, so an over-cap band's doc list
+    // is NULL and Blocking.pairs drops it.
     val bandDocs = banded.groupBy("band")
-      .agg(graft.canon.BoundedAgg.allOrNothingLong(col("doc_id"),
-        MaxBandSize).as("ds"))
-      .filter(col("ds").isNotNull)
-      .select("ds")
-    val cands = bandDocs
-      .select(explode(col("ds")).as("doc_a"), col("ds"))
-      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
+      .agg(graft.canon.BoundedAgg.allOrNothing[Long](col("doc_id"),
+        MaxBandSize).as("ms"))
+    val cands = Blocking.pairs(bandDocs, "doc_a", "doc_b").distinct()
     // exact verify on candidates only: per-doc distinct shingle sets
     val sets = wordShingles(docs, n)
       .groupBy("doc_id")

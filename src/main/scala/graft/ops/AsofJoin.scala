@@ -56,7 +56,7 @@ object AsofJoin {
     val carried = unioned.withColumn("__carry", last(col("__p"), ignoreNulls = true).over(w))
     carried
       .filter(col("__side") === 1)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toSeq.map(col) ++
         payloadCols.map(p => col(s"__carry.$p").as(p)): _*)
   }
 

@@ -3,7 +3,6 @@ package graft.ops
 import graft.Tables
 import graft.embed.{CosineSimilarity, HashingEmbedder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale
@@ -118,16 +117,11 @@ object IvfIndex {
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         explode(probeUdf(col("embedding"))).as("list_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    lists
+    VectorOps.topK(lists
       .join(broadcast(queries), Seq("list_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        CosineSimilarity(col("embedding"), col("qv")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+        CosineSimilarity(col("embedding"), col("qv")).as("cos")), k)
   }
 
   /** Durable IVF-flat layout (the cross-job read path, symmetric with
@@ -142,7 +136,7 @@ object IvfIndex {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = sampleCentroids(emb, nlist)
     // fail fast rather than write an index whose lists dir has no part
-    // files — a later ivfTopKForVector would die on schema inference,
+    // files — a later ivfTopKFromIndex would die on schema inference,
     // far from the cause (ivfTopK's empty-input contract is an empty
     // FRAME, but a durable empty index is just a broken artifact)
     require(centroids.nonEmpty,
@@ -165,65 +159,48 @@ object IvfIndex {
       .parquet(s"$indexDir/lists")
   }
 
-  /** Driver-graded durable-IVF probe: write the list-partitioned index
-    * once per process, then serve the standard 10-query top-k purely
-    * from the durable layout — centroids resolve driver-side from the
-    * sidecar, one `list_id IN (union of all probes)` partition-pruned
-    * scan + an equi-join on list_id serves every query. Candidate
-    * semantics == [[ivfTopK]] (same deterministic quantizer), so the
-    * same rank-invariant oracle applies. */
-  def ivfTopKDurable(spark: SparkSession, sfDir: String, k: Int = 10,
-      nQueries: Int = 10, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
+  /** IVF-flat top-k served from a durable index written by
+    * [[writeIvfIndex]] (mirrors VectorOps.annTopKLshFromIndex): each
+    * query's nprobe nearest centroids resolve driver-side from the
+    * sidecar (nlist rows), then ONE `list_id IN (union of all probes)`
+    * partition-pruned scan + an equi-join on list_id serves every
+    * query. Candidate semantics == [[ivfTopK]] (same deterministic
+    * quantizer), so the same rank-invariant oracle applies. */
+  def ivfTopKFromIndex(spark: SparkSession, indexDir: String,
+      queries: Seq[(Long, Array[Float])], k: Int,
+      nprobe: Int = 4): DataFrame = {
     import spark.implicits._
-    val dir = VectorOps.durableDir("graft_ivf_idx", sfDir)
-    VectorOps.ensureWrittenOnce(dir)(writeIvfIndex(spark, sfDir, dir, nlist))
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = spark.read.parquet(s"$indexDir/centroids")
       .collect()
       .sortBy(_.getInt(0))
       .map(_.getString(1).stripPrefix("[").stripSuffix("]")
         .split(',').filter(_.nonEmpty).map(_.toFloat))
-    val queries = graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") < nQueries)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
     val qRows = queries.flatMap { case (id, v) =>
       nearestLists(centroids, v, nprobe).map(l => (id, l, v.toSeq))
     }.toDF("query_id", "list_id", "qv")
     val allLists = queries
       .flatMap(q => nearestLists(centroids, q._2, nprobe)).distinct
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    spark.read.parquet(s"$dir/lists")
+    VectorOps.topK(spark.read.parquet(s"$indexDir/lists")
       .filter(col("list_id").isin(allLists: _*))
       .join(broadcast(qRows), Seq("list_id"))
       .filter(col("vec_id") =!= col("query_id"))
       // no dedup needed (unlike LSH): each vector lives in exactly ONE
       // list and qRows has distinct (query, list) pairs
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        CosineSimilarity(col("embedding"), col("qv")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+        CosineSimilarity(col("embedding"), col("qv")).as("cos")), k)
   }
 
-  /** Probe the durable index for ONE external query vector: nearest
-    * nprobe centroids resolve driver-side from the sidecar (nlist rows),
-    * then `list_id IN (...)` prunes the partitioned assignment table at
-    * planning time. Output (doc_id, score), score descending. */
-  def ivfTopKForVector(spark: SparkSession, indexDir: String,
-      qv: Array[Float], k: Int, nprobe: Int = 4): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getString(1).stripPrefix("[").stripSuffix("]")
-        .split(',').filter(_.nonEmpty).map(_.toFloat))
-    val probe = nearestLists(centroids, qv, nprobe).toSeq
-    spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probe: _*))
-      .select(col("vec_id").as("doc_id"),
-        CosineSimilarity(col("embedding"),
-          typedLit(qv.toSeq)).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+  /** Driver-graded durable-IVF probe: write the list-partitioned index
+    * once per process, then serve the standard 10-query top-k purely
+    * from the durable layout through [[ivfTopKFromIndex]]. */
+  def ivfTopKDurable(spark: SparkSession, sfDir: String, k: Int = 10,
+      nQueries: Int = 10, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
+    val dir = VectorOps.durableDir("graft_ivf_idx", sfDir)
+    VectorOps.ensureWrittenOnce(dir)(writeIvfIndex(spark, sfDir, dir, nlist))
+    val queries = Tables.embeddings(spark, sfDir)
+      .filter(col("vec_id") < nQueries)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    ivfTopKFromIndex(spark, dir, queries, k, nprobe)
   }
 }

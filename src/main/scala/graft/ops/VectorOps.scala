@@ -22,6 +22,19 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
+  /** Per-query top-k over (query_id, neighbor_id, cos) rows: rank by
+    * cosine descending, ties to the lower neighbor_id (cross-engine
+    * determinism). Output (query_id, rank, neighbor_id), the shape of
+    * every similarity-search query here. */
+  def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(desc("cos"), asc("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"))
+  }
+
   /** Exact top-k cosine neighbors for each query vector (vec_id <
     * nQueries), excluding self. Queries are broadcast (bounded set);
     * candidates stream through one narrow pass per query batch —
@@ -37,16 +50,10 @@ object VectorOps {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = emb
+    topK(emb
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        CosineSimilarity(col("embedding"), col("qv")).as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+        CosineSimilarity(col("embedding"), col("qv")).as("cos")), k)
   }
 
   /** LSH-bucketed approximate top-k: candidates = vectors sharing at
@@ -57,26 +64,17 @@ object VectorOps {
     * in [[HyperplaneLSH]]). */
   def annTopKLsh(spark: SparkSession, sfDir: String,
       k: Int = 10, nQueries: Int = 10): DataFrame = {
-    val bucketsUdf = udf((v: Seq[Float]) => HyperplaneLSH.tableKeys(v.toArray))
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        explode(bucketsUdf(col("embedding"))).as("bucket"))
+    val emb = lshBucketIndex(spark, sfDir)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("bucket"))
-    val cands = emb
+    topK(emb
       .join(broadcast(queries), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("embedding"), col("qv"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    cands
-      .withColumn("cos", CosineSimilarity(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+      .withColumn("cos", CosineSimilarity(col("embedding"), col("qv"))), k)
   }
 
   /** One-time hyperplane-LSH bucket index over the embeddings table:
@@ -113,9 +111,6 @@ object VectorOps {
       .partitionBy("bucket")
       .parquet(indexDir)
 
-  def readLshBucketIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir)
-
   /** Approximate LSH top-k served from an EXPLICIT index frame (the
     * durable bucket-partitioned parquet read): queries resolve to their
     * table keys driver-side, then ONE partition-pruned scan
@@ -131,18 +126,13 @@ object VectorOps {
       HyperplaneLSH.tableKeys(v).map(b => (id, b, v.toSeq))
     }.toDF("query_id", "bucket", "qv")
     val allKeys = queries.flatMap(q => HyperplaneLSH.tableKeys(q._2)).distinct
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    index
+    topK(index
       .filter(col("bucket").isin(allKeys: _*))
       .join(broadcast(qRows), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .dropDuplicates("query_id", "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        CosineSimilarity(col("embedding"), col("qv")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+        CosineSimilarity(col("embedding"), col("qv")).as("cos")), k)
   }
 
   /** Paths of durable indexes already written by THIS process — the
@@ -200,7 +190,7 @@ object VectorOps {
       .map(b => new org.apache.hadoop.fs.Path(s"$dir/bucket=$b"))
       .filter(fs.exists).map(_.toString)
     val index =
-      if (probeDirs.isEmpty) readLshBucketIndex(spark, dir)
+      if (probeDirs.isEmpty) spark.read.parquet(dir)
       else spark.read.option("basePath", dir).parquet(probeDirs: _*)
     annTopKLshFromIndex(spark, index, queries, k)
   }
@@ -429,7 +419,7 @@ object VectorOps {
     import spark.implicits._
     val cands = mmrFetch(spark, sfDir, queryId, fetchK)
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    val remaining = scala.collection.mutable.ArrayBuffer(cands: _*)
+    val remaining = scala.collection.mutable.ArrayBuffer.from(cands)
     while (selected.length < k && remaining.nonEmpty) {
       val scoredNow = remaining.map { case (id, simQ, v) =>
         val maxSel = if (selected.isEmpty) 0.0

@@ -113,6 +113,14 @@ object GraphSink {
       .reduce(_.unionByName(_)).filter(col("count") > 0)
   }
 
+  /** One (check_name, violations) count row — shared by every invariant
+    * check builder ([[integrity]], [[aliasClosure]] and SparkEntry's) so
+    * the check-row shape cannot drift between them (and stays aligned
+    * with the oracle SQL's SELECT shape). */
+  private[graft] def checkCount(name: String, df: DataFrame): DataFrame =
+    df.agg(count(lit(1)).as("violations"))
+      .select(lit(name).as("check_name"), col("violations"))
+
   /** Referential-integrity gate over the whole graph: every edge
     * endpoint must resolve to an existing node (the Cypher-MATCH
     * no-dangling guarantee the bulk-relational encoding must preserve).
@@ -143,33 +151,30 @@ object GraphSink {
     val ents = gated(r.entities.select(col("canonical_id")))
     val evs = gated(r.events.select(col("event_id")))
     val chs = gated(r.chunks.toDF().select(col("chunk_id")).distinct())
-    def cnt(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("violations"))
-        .select(lit(name).as("check_name"), col("violations"))
     Seq(
-      cnt("edges_dangling_subj", r.edges.join(
+      checkCount("edges_dangling_subj", r.edges.join(
         ents, col("subj_id") === col("canonical_id"), "left_anti")),
-      cnt("edges_dangling_obj", r.edges.join(
+      checkCount("edges_dangling_obj", r.edges.join(
         ents, col("obj_id") === col("canonical_id"), "left_anti")),
-      cnt("participates_dangling_entity", r.participates.join(
+      checkCount("participates_dangling_entity", r.participates.join(
         ents, Seq("canonical_id"), "left_anti")),
-      cnt("participates_dangling_event", r.participates.join(
+      checkCount("participates_dangling_event", r.participates.join(
         evs, Seq("event_id"), "left_anti")),
-      cnt("event_edges_dangling_head", r.eventEdges.join(
+      checkCount("event_edges_dangling_head", r.eventEdges.join(
         evs, col("head_id") === col("event_id"), "left_anti")),
-      cnt("event_edges_dangling_tail", r.eventEdges.join(
+      checkCount("event_edges_dangling_tail", r.eventEdges.join(
         evs, col("tail_id") === col("event_id"), "left_anti")),
-      cnt("events_dangling_chunk", r.events.join(chs, Seq("chunk_id"), "left_anti")),
-      cnt("triples_dangling_chunk", r.triples.join(chs, Seq("chunk_id"), "left_anti")),
+      checkCount("events_dangling_chunk", r.events.join(chs, Seq("chunk_id"), "left_anti")),
+      checkCount("triples_dangling_chunk", r.triples.join(chs, Seq("chunk_id"), "left_anti")),
       // pre-aggregation event relations must reference fired events
       // (E4 drops unknown endpoints — a dangling id here means the
       // extractor emitted a relation for an event it never emitted)
-      cnt("event_rels_dangling_head", r.eventRels.join(
+      checkCount("event_rels_dangling_head", r.eventRels.join(
         evs, col("head_event_id") === col("event_id"), "left_anti")),
-      cnt("event_rels_dangling_tail", r.eventRels.join(
+      checkCount("event_rels_dangling_tail", r.eventRels.join(
         evs, col("tail_event_id") === col("event_id"), "left_anti")),
       // G4 identity contract: event_id = chunk_id + "_event_" + ord
-      cnt("event_id_malformed", r.events.filter(
+      checkCount("event_id_malformed", r.events.filter(
         !col("event_id").startsWith(concat(col("chunk_id"), lit("_event_")))))
     ).reduce(_.unionByName(_))
   }
@@ -189,19 +194,16 @@ object GraphSink {
     *    at the endpoint rewrite). */
   def aliasClosure(r: KGPipeline.Result): DataFrame = {
     val nm = r.nameMap
-    def cnt(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("violations"))
-        .select(lit(name).as("check_name"), col("violations"))
     Seq(
-      cnt("aliases_multi_mapped", nm.groupBy("entity_name")
+      checkCount("aliases_multi_mapped", nm.groupBy("entity_name")
         .agg(countDistinct("canonical_id").as("n")).filter(col("n") > 1)),
-      cnt("canonical_not_min_member", nm.groupBy("canonical_id")
+      checkCount("canonical_not_min_member", nm.groupBy("canonical_id")
         .agg(min("name_key").as("mn")).filter(col("mn") =!= col("canonical_id"))),
-      cnt("namemap_dangling_canonical", nm.select("canonical_id").distinct()
+      checkCount("namemap_dangling_canonical", nm.select("canonical_id").distinct()
         .join(r.entities.select("canonical_id"), Seq("canonical_id"), "left_anti")),
-      cnt("entities_without_alias", r.entities.select("canonical_id")
+      checkCount("entities_without_alias", r.entities.select("canonical_id")
         .join(nm.select("canonical_id").distinct(), Seq("canonical_id"), "left_anti")),
-      cnt("mention_surface_unmapped",
+      checkCount("mention_surface_unmapped",
         r.mentions.select(col("entityName").as("entity_name")).distinct()
           .join(nm.select("entity_name"), Seq("entity_name"), "left_anti"))
     ).reduce(_.unionByName(_))

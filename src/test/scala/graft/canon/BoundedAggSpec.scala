@@ -50,4 +50,30 @@ class BoundedAggSpec extends SparkSpec {
       .orderBy("k").collect().map(r => (r.getString(0), r.getSeq[String](1)))
     assert(twoPhase.toSeq == onePhase.toSeq)
   }
+
+  test("allOrNothing: full member set at cap, NULL at cap + 1, NULLs skipped, any partitioning") {
+    import spark.implicits._
+    val cap = 5
+    // group "at" holds exactly cap distinct members plus NULL strings
+    // (skipped, so they do not count); group "over" holds cap + 1
+    val strs = (1 to cap).map(i => ("at", s"m$i")) ++
+      Seq(("at", null), ("at", null)) ++
+      (1 to cap + 1).map(i => ("over", s"m$i"))
+    val longs = (1 to cap).map(i => ("at", i.toLong)) ++
+      (1 to cap + 1).map(i => ("over", i.toLong))
+    for (parts <- Seq(1, 4)) {
+      val byStr = strs.toDF("g", "v").repartition(parts)
+        .groupBy("g").agg(BoundedAgg.allOrNothing[String](col("v"), cap).as("ms"))
+        .collect().map(r => r.getString(0) -> Option(r.getSeq[String](1))).toMap
+      assert(byStr("at").map(_.toSet) == Some((1 to cap).map(i => s"m$i").toSet), s"$parts")
+      assert(byStr("at").get.size == cap, s"$parts")
+      assert(byStr("over").isEmpty, s"$parts")
+      val byLong = longs.toDF("g", "v").repartition(parts)
+        .groupBy("g").agg(BoundedAgg.allOrNothing[Long](col("v"), cap).as("ms"))
+        .collect().map(r => r.getString(0) -> Option(r.getSeq[Long](1))).toMap
+      assert(byLong("at").map(_.toSet) == Some((1 to cap).map(_.toLong).toSet), s"$parts")
+      assert(byLong("at").get.size == cap, s"$parts")
+      assert(byLong("over").isEmpty, s"$parts")
+    }
+  }
 }

@@ -111,7 +111,7 @@ class PlanSpec extends SparkSpec {
         .filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
         .collect().head.getSeq[Float](1).toArray
       val viaIdx = VectorOps.annTopKLshFromIndex(spark,
-        VectorOps.readLshBucketIndex(spark, dir), Seq(0L -> qv), 10)
+        spark.read.parquet(dir), Seq(0L -> qv), 10)
       val viaScan = VectorOps.annTopKLsh(spark, sf0001)
         .filter(org.apache.spark.sql.functions.col("query_id") === 0L)
       val got = viaIdx.collect().map(_.toString).sorted.toSeq
@@ -148,12 +148,12 @@ class PlanSpec extends SparkSpec {
       val qv = graft.Tables.embeddings(spark, sf0001)
         .filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
         .collect().head.getSeq[Float](1).toArray
-      val viaIdx = IvfIndex.ivfTopKForVector(spark, dir, qv, k = 11)
-      // the probe includes the query vector itself (cos 1.0); drop it
-      val got = viaIdx.collect().map(_.getLong(0)).filter(_ != 0L).take(10).toSeq
+      val viaIdx = IvfIndex.ivfTopKFromIndex(spark, dir, Seq(0L -> qv), 10)
+      val got = viaIdx.collect().map(_.toString).sorted.toSeq
       val mem = IvfIndex.ivfTopK(spark, sf0001)
         .filter(org.apache.spark.sql.functions.col("query_id") === 0L)
-        .orderBy("rank").collect().map(_.getLong(2)).toSeq
+        .collect().map(_.toString).sorted.toSeq
+      assert(got.nonEmpty)
       assert(got == mem, s"durable probe $got != in-memory $mem")
       val scans = fileScans(viaIdx.queryExecution.executedPlan)
       assert(scans.nonEmpty, plan(viaIdx))

@@ -17,7 +17,7 @@ class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 class PipelineSpec extends SparkSpec {
 
   private def sortedRows(df: DataFrame): Seq[String] = {
-    val cols = df.schema.fields.sortBy(_.name).map { f =>
+    val cols = df.schema.fields.toSeq.sortBy(_.name).map { f =>
       if (f.dataType == org.apache.spark.sql.types.BinaryType) md5(col(f.name))
       else col(f.name)
     }
