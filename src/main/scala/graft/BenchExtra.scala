@@ -39,7 +39,7 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.pipeline.KGJob.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = session(cpus)
     if (sys.env.contains("GRAFT_EXTRA_JOBS")) {
       val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()

@@ -140,7 +140,7 @@ object ConnectedComponents {
       edges = small
       iter += 1
       if (sys.env.contains("GRAFT_CC_VERBOSE")) {
-        println(f"[cc] iter $iter sig=$sig prev=$prevSig " +
+        System.err.println(f"[cc] iter $iter sig=$sig prev=$prevSig " +
           f"sigTime=${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
     }

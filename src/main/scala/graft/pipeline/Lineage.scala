@@ -5,6 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -251,13 +252,42 @@ object KGJob {
     val nPages = positional.headOption.map(_.toLong).getOrElse(1000L)
     val outDir = if (positional.length > 1) positional(1) else "/tmp/graft_kg"
     val resume = positional.contains("resume")
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = session(parseCpus(sys.env.get("SPARK_GRAFT_CPUS")))
+    // every Janino compile of a generated class lands in this JVM-wide
+    // histogram, a cache hit does not; its mean covers the JVM's
+    // compiles, which under spark-submit are this run's
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiled0 = compiles.getCount
     val t0 = System.nanoTime()
     val result = run(spark, nPages, outDir, resume, cfg = cfg)
     val sec = (System.nanoTime() - t0) / 1e9
     result.foreach { case (k, v) => println(f"[kg] $k%-10s $v%,d rows") }
     println(f"[kg] wall ${sec}%.1f s")
+    println(f"[kg] codegen ${compiles.getCount - compiled0}%,d classes compiled, " +
+      f"mean ${compiles.getSnapshot.getMean}%.1f ms")
     spark.stop()
+  }
+
+  /** Entries of Spark's JVM-wide cache of compiled generated classes:
+    * about 3x the ~300 classes a whole perfbench `crawl` run compiles.
+    * Spark's default of 100 is below one DAG pass (~250 classes), so
+    * the LRU cycles and every pass recompiles. A static conf, fixed by
+    * a JVM's first session: build.sbt passes the same value to the
+    * forked JVMs whose first session is built elsewhere. */
+  val CodegenCacheMaxEntries = 1000
+
+  /** A SPARK_GRAFT_CPUS value: unset or blank gives 32 cores; anything
+    * but a positive integer falls back to 32 too, with a stderr warning
+    * naming the value (not a JVM crash, not `local[0]`). */
+  def parseCpus(raw: Option[String]): Int = {
+    val default = 32
+    raw.map(_.trim).filter(_.nonEmpty).fold(default) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse {
+        Console.err.println(s"[kg] ignoring SPARK_GRAFT_CPUS='$v' " +
+          s"(not a positive integer); using $default")
+        default
+      }
+    }
   }
 
   /** The job's local session on `cpus` cores (shuffle partitions =
@@ -271,6 +301,8 @@ object KGJob {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheMaxEntries.toString)
       // see Bench.session: the canonicalization aggs carry capped
       // accumulator state, so hash aggregation is safe far beyond the
       // 128-key sort-fallback default

@@ -444,4 +444,52 @@ class PipelineSpec extends SparkSpec {
     assert(metricRows("pages") == pgBefore, "unaffected stage was recomputed")
     assert(spark.read.parquet(s"$dir/events").count() > 0)
   }
+
+  test("a second pass over the same pages compiles (almost) no generated code") {
+    // Spark compiles each distinct generated class once per JVM and
+    // keeps it in an LRU cache of spark.sql.codegen.cache.maxEntries.
+    // One pass needs ~250 classes: under the default 100 entries the
+    // cache cycles and the second pass recompiled 255-267 of them. With
+    // KGJob's 1000 it compiled 10-42 in five runs: AQE numbers its
+    // codegen stages in the order they get planned, the number is part
+    // of the class text, so a few stages come out under a new name.
+    // The bound is about twice the worst of those.
+    val pages = graft.pages.PagesGenerator.pages(spark, 150, 4)
+    def pass(): Unit = graft.sink.GraphSink.write(KGPipeline.runOnPages(spark, pages),
+      Files.createTempDirectory("kg_codegen").toString)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = compiles.getCount
+    pass()
+    val c1 = compiles.getCount
+    pass()
+    val second = compiles.getCount - c1
+    info(s"classes compiled: first pass ${c1 - c0}, second pass $second")
+    assert(second <= 80, s"the second pass compiled $second generated classes")
+  }
+
+  test("the codegen cache size is the same on both launch paths") {
+    // build.sbt passes it to every forked JVM (this one included) as a
+    // system property; KGJob.session sets it on spark-submit runs
+    assert(sys.props.get("spark.sql.codegen.cache.maxEntries") ==
+      Some(KGJob.CodegenCacheMaxEntries.toString))
+  }
+
+  test("SPARK_GRAFT_CPUS: positive integers parse, blank and malformed fall back") {
+    def parse(v: Option[String]): (Int, String) = {
+      val err = new java.io.ByteArrayOutputStream()
+      val n = Console.withErr(err)(KGJob.parseCpus(v))
+      (n, err.toString("UTF-8"))
+    }
+    assert(parse(Some("4")) == ((4, "")))
+    assert(parse(Some(" 1 ")) == ((1, "")))
+    // unset and blank mean "no override": 32 cores, without a warning
+    assert(parse(None) == ((32, "")))
+    assert(parse(Some("  ")) == ((32, "")))
+    // malformed or not positive: 32, with a warning that names the value
+    for (bad <- Seq("abc", "0", "-2", "4.0", "99999999999")) {
+      val (n, msg) = parse(Some(bad))
+      assert(n == 32, bad)
+      assert(msg.contains(s"'$bad'"), s"no warning naming '$bad': $msg")
+    }
+  }
 }
