@@ -24,9 +24,14 @@ object SparkEntry {
 
   /** Flagship: the full KG-construction DAG (SURVEY.md §7.2) on a small
     * synthetic pages table — canonical edges with entity names and
-    * provenance counts. Driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    val r = graft.pipeline.KGPipeline.run(spark, 200, partitions = 8)
+    * provenance counts, built under [[config]]. Driver smoke-checks
+    * rows>0. */
+  def entry(spark: SparkSession): DataFrame =
+    namedEdges(graft.pipeline.KGPipeline.run(spark, 200, partitions = 8,
+      cfg = config))
+
+  /** [[entry]]'s projection of a pipeline result. */
+  private[graft] def namedEdges(r: graft.pipeline.KGPipeline.Result): DataFrame = {
     val names = r.entities.select(col("canonical_id"), col("entity_name"))
     r.edges
       .join(names.withColumnRenamed("canonical_id", "subj_id")

@@ -1,8 +1,9 @@
 package graft.canon
 
 import graft.embed.{CosineSimilarity, HashingEmbedder}
-import graft.lsh.{Blocking, MinHasher}
-import org.apache.spark.sql.DataFrame
+import graft.lsh.{Blocking, HyperplaneLSH, MinHasher}
+import graft.ops.VectorOps
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Entity canonicalization (SURVEY.md §2.4 G9-G12):
@@ -290,67 +291,65 @@ object Canonicalizer {
     (canonical, nameMap)
   }
 
-  /** Distinct-content representative embeddings for [[eventKnn]]:
-    * exact-duplicate contents collapse to min event_id, each
+  /** The event path's one representative rule, shared by [[eventVecs]]
+    * and `KGPipeline.eventEdges`: events with equal content collapse to
+    * their min(event_id). One row per content: (ch, rep_id, carry*). */
+  def eventReps(events: DataFrame, carry: Column*): DataFrame =
+    events.select(col("*"), eventContentKey).groupBy("ch")
+      .agg(min(col("event_id")).as("rep_id"), carry: _*)
+
+  /** An event's content key `ch`: full md5 equality is the repo's
+    * deterministic stand-in for content equality (the G1/G2 chunk dedup
+    * key), so the hash, not the widest column, is the shuffle key. */
+  def eventContentKey: Column = md5(col("content")).as("ch")
+
+  /** Distinct-content representative embeddings for [[eventKnn]]: each
     * representative embeds its lowercased content. Public so the
     * driver can dump the SAME vectors the KNN consumed and the DuckDB
     * oracle can recompute the similarity ranking from them. */
   def eventVecs(events: DataFrame): DataFrame = {
     val embedContentUdf = udf((s: String) => HashingEmbedder.embed(s.toLowerCase))
-    events
-      .groupBy(col("content"))
-      .agg(min(col("event_id")).as("event_id"))
-      .select(col("event_id"), embedContentUdf(col("content")).as("emb"))
+    eventReps(events, any_value(col("content")).as("content"))
+      .select(col("rep_id").as("event_id"), embedContentUdf(col("content")).as("emb"))
   }
 
   /** G13 event disambiguation (reference event_graphrag_neo4j.py:600-673:
     * GDS KNN topK=10, similarityCutoff=0.85 over event embeddings,
     * emitting SIMILAR_TO edges): hyperplane-LSH table keys over the
-    * content embedding replace the server-side KNN index — candidates
-    * come from an equi-join on (table, key), verified by exact cosine,
-    * then per-source top-k by window rank. Input: events with
-    * (event_id, content); output (src_event, dst_event, rank). */
+    * content embedding replace the server-side KNN index — per-bucket
+    * member lists through [[Blocking.pairs]], exact cosine once per
+    * unordered pair (it is symmetric bit for bit), both orientations
+    * ranked by `VectorOps.topK`. Input: events with (event_id, content);
+    * output (src_event, dst_event, rank). The lists are uncapped on
+    * purpose: contents come only from the KB's 28 event specs, whose
+    * largest bucket holds 3 (CanonicalizerSpec), at any corpus size. */
   def eventKnn(events: DataFrame, topK: Int, cutoff: Double): DataFrame = {
-    val bucketsUdf = udf((v: Seq[Float]) =>
-      graft.lsh.HyperplaneLSH.tableKeys(v.toArray))
-    // exact-duplicate contents collapse to one representative (min
-    // event_id) BEFORE the similarity join: identical contents are
-    // cosine-1.0 twins, and a hot event repeated across millions of
-    // pages would otherwise form one quadratic LSH bucket — the
-    // hot-entity star problem (SURVEY.md §4.3) in event form. The
-    // reference's all-pairs KNN has the same blowup; this is the
-    // documented scale deviation.
-    // checkpointed: the distinct-content embedding table feeds the band
-    // join (twice), and the candidate verify joins back onto it — the
-    // same thin-band-join shape as the entity LSH (G9): only
-    // (event_id, bucket) rides the self-join shuffle, embeddings attach
-    // to the (much smaller) candidate pair set
-    // LAZY checkpoint: Result construction must not pay an eager job
-    // for a frame the caller may never consume (SparkEntry.entry uses
-    // only edges/entities); the first action materializes it once for
-    // all four plan references
+    // exact-duplicate contents collapse to one representative BEFORE the
+    // similarity join: identical contents are cosine-1.0 twins, and a
+    // hot event repeated across millions of pages would otherwise form
+    // one quadratic LSH bucket — the hot-entity star problem (SURVEY.md
+    // §4.3) in event form (the reference's all-pairs KNN has the same
+    // blowup; this is the documented scale deviation). The table feeds
+    // the bucket lists and both verify joins, so it is checkpointed —
+    // LAZILY: Result construction must not pay an eager job for a frame
+    // the caller may never consume (SparkEntry.entry uses only
+    // edges/entities).
     val emb = eventVecs(events).localCheckpoint(false)
-    val banded = emb.select(col("event_id"),
-      explode(bucketsUdf(col("emb"))).as("bucket"))
-    val candPairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.bucket") === col("b.bucket") &&
-          col("a.event_id") =!= col("b.event_id"))
-      .select(col("a.event_id").as("src_event"), col("b.event_id").as("dst_event"))
-      .distinct()
-    val cands = candPairs
-      .join(emb.withColumnRenamed("event_id", "src_event")
-        .withColumnRenamed("emb", "ea"), "src_event")
-      .join(emb.withColumnRenamed("event_id", "dst_event")
-        .withColumnRenamed("emb", "eb"), "dst_event")
-      .withColumn("cos", CosineSimilarity(col("ea"), col("eb")))
+    val buckets = emb
+      .select(col("event_id"), explode(HyperplaneLSH.keys(col("emb"))).as("bucket"))
+      .groupBy("bucket").agg(collect_list(col("event_id")).as("ms"))
+    val verified = Blocking.pairs(buckets, "a", "b").distinct()
+      .join(emb.select(col("event_id").as("a"), col("emb").as("ea")), "a")
+      .join(emb.select(col("event_id").as("b"), col("emb").as("eb")), "b")
+      .select(col("a"), col("b"), CosineSimilarity(col("ea"), col("eb")).as("cos"))
       .filter(col("cos") >= cutoff)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("src_event").orderBy(desc("cos"), asc("dst_event"))
-    cands
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("src_event", "dst_event", "rank")
+    // both orientations of each verified pair
+    val scored = verified.select(explode(array(
+      struct(col("a").as("query_id"), col("b").as("neighbor_id")),
+      struct(col("b").as("query_id"), col("a").as("neighbor_id")))).as("p"), col("cos"))
+    VectorOps.topK(scored.select("p.*", "cos"), topK)
+      .select(col("query_id").as("src_event"), col("neighbor_id").as("dst_event"),
+        col("rank"))
   }
 
   /** G5 semantics: rewrite triple endpoints through the canonical map

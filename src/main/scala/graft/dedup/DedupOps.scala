@@ -191,32 +191,22 @@ object DedupOps {
   }
 
   /** SimHash near-duplicate pairs: 64-bit simhash over whitespace
-    * tokens, banded into 4 x 16-bit blocks (pigeonhole: any pair at
-    * Hamming distance <= 3 shares a block), block equi-join for
-    * candidates, exact Hamming verify. The hash family is ours
-    * (splitmix64) so the oracle runs against the dumped
-    * [[simhashValues]] (see there). */
+    * tokens ([[simhashValues]]), banded into 4 x 16-bit blocks
+    * (pigeonhole: any pair at Hamming distance <= 3 shares a block),
+    * uncapped per-block lists through [[Blocking.pairs]] (the oracle's
+    * completeness check needs every pair), exact Hamming verify. */
   def simhashPairs(spark: SparkSession, sfDir: String,
       maxHamming: Int = 3): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val hashed = docs.as[(Long, String)].mapPartitions { it =>
-      it.map { case (id, text) => (id, SimHasher.simhash(text)) }
-    }.toDF("doc_id", "simhash").persist()
-    val blocks = hashed.as[(Long, Long)].mapPartitions { it =>
-      it.flatMap { case (id, h) =>
-        SimHasher.blockKeys(h).iterator.map(b => (id, h, b))
-      }
-    }.toDF("doc_id", "simhash", "block")
-    val hammingUdf = udf((a: Long, b: Long) => SimHasher.hamming(a, b))
-    blocks.as("a")
-      .join(blocks.as("b"),
-        col("a.block") === col("b.block") && col("a.doc_id") < col("b.doc_id"))
+    val blockKeysUdf = udf((h: Long) => SimHasher.blockKeys(h))
+    // (doc_id, simhash) members: `a < b` orders by doc_id first, and
+    // the hash rides along to the verify
+    val lists = simhashValues(spark, sfDir)
+      .select(struct(col("doc_id"), col("simhash")).as("m"),
+        explode(blockKeysUdf(col("simhash"))).as("block"))
+      .groupBy("block").agg(collect_list(col("m")).as("ms"))
+    Blocking.pairs(lists, "a", "b").distinct()
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("ha"), col("b.simhash").as("hb"))
-      .distinct()
-      .withColumn("hamming", hammingUdf(col("ha"), col("hb")))
+        bit_count(col("a.simhash") bitwiseXOR col("b.simhash")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
   }
 }

@@ -1,6 +1,8 @@
 package graft.lsh
 
 import graft.embed.HashingEmbedder.{hashString, mix64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.udf
 
 /** MinHash signatures + banded LSH keys for near-duplicate detection
   * over shingle sets — the scale path replacing the reference's O(n^2)
@@ -89,8 +91,6 @@ object SimHasher {
     out
   }
 
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /** Block keys for banding: (blockIndex, 16-bit slice). */
   def blockKeys(h: Long): Array[Long] = {
     Array.tabulate(Blocks) { b =>
@@ -101,13 +101,17 @@ object SimHasher {
 }
 
 /** Random-hyperplane (sign) LSH for cosine similarity over dense
-  * float vectors — candidate generation for the >= 0.95 entity-merge
-  * verify (SURVEY.md G9) and the >= 0.85 event KNN (G13).
+  * float vectors. Its users: the approximate-neighbour (ANN) family
+  * over the `embeddings` table (`VectorOps.annTopKLsh`, its bucket
+  * index and the durable index probes) and the G13 event KNN
+  * (`Canonicalizer.eventKnn`, cosine >= 0.85). The G9 entity-merge
+  * verify bands with MinHash instead (`Canonicalizer.bandsUdf`).
   *
   * Hyperplane i's component for dimension d is a deterministic
   * pseudo-gaussian from splitmix64 — no stored matrices, identical on
-  * every executor. 16 tables x 8 bits: P(candidate | cos=0.95) =
-  * 1-(1-p8)^16 where p = 1 - acos(0.95)/pi ~ 0.899 => ~0.9988.
+  * every executor. 16 tables x 8 bits: P(candidate | cos) =
+  * 1-(1-p^8)^16 where p = 1 - acos(cos)/pi, so ~0.9999 at cos = 0.95
+  * and ~0.977 at the event cutoff cos = 0.85 (p ~ 0.823).
   */
 object HyperplaneLSH {
   val BitsPerTable = 8
@@ -139,4 +143,10 @@ object HyperplaneLSH {
       (t.toLong << 32) | key
     }
   }
+
+  private val tableKeysUdf = udf((v: Seq[Float]) => tableKeys(v.toArray))
+
+  /** [[tableKeys]] of an ARRAY<FLOAT> column: the one bucket-key column
+    * every hyperplane-LSH caller explodes. */
+  def keys(v: Column): Column = tableKeysUdf(v)
 }

@@ -83,10 +83,9 @@ object VectorOps {
     * probed per query — the per-query cost is then an index lookup, not
     * a corpus scan. */
   def lshBucketIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    val bucketsUdf = udf((v: Seq[Float]) => HyperplaneLSH.tableKeys(v.toArray))
     Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
-        explode(bucketsUdf(col("embedding"))).as("bucket"))
+        explode(HyperplaneLSH.keys(col("embedding"))).as("bucket"))
   }
 
   /** Durable form of the bucket index: written ONCE as a parquet table

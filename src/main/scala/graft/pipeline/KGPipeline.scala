@@ -251,22 +251,13 @@ object KGPipeline {
   /** G6 event-relation edges: the reference stores one EVENT_RELATION
     * edge per (head content, tail content, type), matching event nodes
     * BY CONTENT (event_graphrag_neo4j.py:428-477). Spark form: resolve
-    * each endpoint to its content representative (min event_id per
-    * content — the same duplicate-content collapse the event-KNN G13
-    * uses), then one dedup aggregate keyed (head, tail, type). The
-    * representative map is vocabulary-bounded; n_sources counts the
+    * each endpoint to its content representative
+    * (`Canonicalizer.eventReps`, as the event KNN G13 does), then one
+    * dedup aggregate keyed (head, tail, type). n_sources counts the
     * chunk-level provenance the per-row MERGEs would have replayed. */
   def eventEdges(events: DataFrame, eventRels: DataFrame): DataFrame = {
-    // Representative map keyed by md5(content) instead of the raw
-    // content: the event content strings are the widest column on the
-    // frame and the old groupBy(content) + join-back shipped them
-    // through both shuffles purely as a join key (guide §2.3 — shuffle
-    // keys, not payloads). Full-md5 equality is the repo's established
-    // deterministic stand-in for content equality (the G1/G2 chunk
-    // dedup key), so the grouping is unchanged.
-    val ev = events.select(col("event_id"), md5(col("content")).as("ch"))
-    val rep = ev.groupBy("ch").agg(min("event_id").as("rep_id"))
-      .join(ev, "ch")
+    val rep = Canonicalizer.eventReps(events)
+      .join(events.select(col("event_id"), Canonicalizer.eventContentKey), "ch")
       .select(col("event_id"), col("rep_id"))
     // ONE un-renamed rep subtree for both endpoint joins (explicit
     // conditions -> ReuseExchange computes the map once — same pattern

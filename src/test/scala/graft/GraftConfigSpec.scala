@@ -78,4 +78,20 @@ class GraftConfigSpec extends SparkSpec {
           "default — the CLI flag did not reach canonicalize")
     } finally SparkEntry.config = prev
   }
+
+  test("SparkEntry.entry builds its graph under SparkEntry.config") {
+    // aim 3: no decision keyed on the default config when the run's
+    // config differs — entry must build under the CLI-set config
+    val cfg = GraftConfig(mergeThreshold = 0.05)
+    def edgesOf(r: graft.pipeline.KGPipeline.Result): Seq[String] =
+      SparkEntry.namedEdges(r).collect().map(_.toString).sorted.toSeq
+    val atDefault = edgesOf(graft.pipeline.KGPipeline.run(spark, 200, partitions = 8))
+    val atCfg = edgesOf(graft.pipeline.KGPipeline.run(spark, 200, partitions = 8, cfg = cfg))
+    assert(atCfg != atDefault, "the config leaves entry's output unchanged — vacuous")
+    val prev = SparkEntry.config
+    try {
+      SparkEntry.config = cfg
+      assert(SparkEntry.entry(spark).collect().map(_.toString).sorted.toSeq == atCfg)
+    } finally SparkEntry.config = prev
+  }
 }

@@ -69,4 +69,50 @@ class CanonicalizerSpec extends SparkSpec {
       assert(sortedRows(m) == m0, s"name map differs under row-order seed $seed")
     }
   }
+
+  test("event KNN over the KB's whole event vocabulary equals its definitions") {
+    import spark.implicits._
+    // event contents come only from the KB's event specs; every third
+    // one also appears under a lower id, which must become its
+    // representative (min event_id per content)
+    val contents = graft.extract.TripleExtractor.default.eventSpecRows.map(_._2).distinct
+    val events = (contents.zipWithIndex.map { case (c, i) => (f"e$i%03d", c) } ++
+      contents.zipWithIndex.collect { case (c, i) if i % 3 == 0 => (f"d$i%03d", c) })
+      .toDF("event_id", "content")
+    val reps = events.as[(String, String)].collect().groupBy(_._2)
+      .map { case (c, es) => es.map(_._1).min -> c }.toIndexedSeq.sortBy(_._1)
+    val embs = reps.map { case (_, c) => HashingEmbedder.embed(c.toLowerCase) }
+    val keys = embs.map(v => graft.lsh.HyperplaneLSH.tableKeys(v).toSet)
+    val data = embs.map(v => ArrayData.toArrayData(v))
+    // every ordered representative pair with its exact cosine
+    val scored = for {
+      i <- reps.indices; j <- reps.indices if i != j
+    } yield (i, j, CosineSimilarity.compute(data(i), data(j)))
+    def ranked(rows: Seq[(Int, Int, Double)], k: Int): Seq[String] =
+      rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
+        rs.sortBy(r => (-r._3, reps(r._2)._1)).take(k).zipWithIndex.map {
+          case ((i, j, _), rank) => s"[${reps(i)._1},${reps(j)._1},${rank + 1}]"
+        }
+      }.sorted
+    def knn(k: Int, cutoff: Double): Seq[String] =
+      sortedRows(Canonicalizer.eventKnn(events, k, cutoff))
+    // 1. blocking: with no cutoff and no top-k bound the output is
+    //    exactly the pairs that share a hyperplane-LSH key, ranked by
+    //    (desc cos, asc dst)
+    val candidates = scored.filter { case (i, j, _) => (keys(i) & keys(j)).nonEmpty }
+    assert(knn(1000, -1.0) == ranked(candidates, 1000))
+    // the largest bucket bounds the uncapped member lists of eventKnn
+    val largestBucket = keys.flatten.groupBy(identity).values.map(_.size).max
+    val measured = s"${reps.size} representatives, ${candidates.size / 2} " +
+      s"candidate pairs, largest bucket $largestBucket"
+    info(measured)
+    assert((reps.size, candidates.size / 2, largestBucket) == ((28, 34, 3)), measured)
+    // 2. at the production cutoff it equals the all-pairs exact KNN:
+    //    pair completeness 1.0 over the whole vocabulary
+    val cfg = graft.GraftConfig.default
+    val exact = scored.filter(_._3 >= cfg.eventKnnCutoff)
+    assert(exact.nonEmpty, "no pair clears the event cutoff — vacuous")
+    info(s"${exact.size / 2} pair(s) at cos >= ${cfg.eventKnnCutoff}, PC = 1.0")
+    assert(knn(cfg.eventKnnTopK, cfg.eventKnnCutoff) == ranked(exact, cfg.eventKnnTopK))
+  }
 }
