@@ -83,8 +83,7 @@ object BenchExtra {
         // query-map frame explains as LocalTableScan — dump the inner
         // distributed plan for those instead
         val inner: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-          "kg_integrity" -> ((s, d) =>
-            graft.sink.GraphSink.integrity(SparkEntry.kgResult(s, d), SparkEntry.config)),
+          "kg_integrity" -> ((s, d) => SparkEntry.kgIntegrity(s, d)),
           "kg_alias_closure" -> ((s, d) =>
             graft.sink.GraphSink.aliasClosure(SparkEntry.kgResult(s, d))),
           "kg_evidence" -> ((s, d) => SparkEntry.kgEvidenceChecks(s, d)),

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
+
 /** Typed pipeline configuration — the Spark-native form of the
   * reference's config registry (reference framework/config.py:11-88 +
   * framework/register.py:7-26: a tagged-union of per-component config
@@ -29,9 +32,11 @@ package graft
   *   (descriptions / source_chunks) per entity or edge
   * @param maxBandSize    hot-band guard: band keys shared by more
   *   distinct names than this are dropped as degenerate
-  * @param broadcastNameMapMax  endpoint-rewrite joins broadcast the
-  *   name map at or below this row count, shuffle above; the candidate
-  *   verify broadcasts its display-name lookup under the same cap
+  * @param broadcastNameMapMax  the cap of the one broadcast-size gate,
+  *   [[GraftConfig.broadcastGate]], over the G5 name map, the G9
+  *   display-name lookup and the integrity id sets. Its row counts come
+  *   from `KGJob`'s stage footers (`Lineage.rows`), the in-memory
+  *   checkpoints' own jobs (`Jobs.countedCheckpoint`) and `integrity`'s caller
   * @param ccLocalSolveMax  edge count at or below which connected
   *   components solve on the driver (union-find) instead of the
   *   distributed large-star/small-star fixpoint; defaults to the
@@ -51,6 +56,13 @@ final case class GraftConfig(
 
 object GraftConfig {
   val default: GraftConfig = GraftConfig()
+
+  /** The one broadcast-size gate: a lookup whose row count is known and
+    * at most `cfg.broadcastNameMapMax` gets a `broadcast()` hint; a
+    * larger or unknown count adds nothing and leaves the join to Spark's
+    * planner and AQE's runtime conversion. It never counts. */
+  def broadcastGate(df: DataFrame, rows: Option[Long], cfg: GraftConfig): DataFrame =
+    if (rows.exists(_ <= cfg.broadcastNameMapMax)) broadcast(df) else df
 
   /** Parse `--key=value` flags (kebab-case keys, one per field) into a
     * config; non-flag args pass through in order as the second member.

@@ -65,6 +65,14 @@ object SparkEntry {
   private[graft] def kgResult(s: SparkSession, d: String)
       : graft.pipeline.KGPipeline.Result = kg(s, d)
 
+  /** The integrity checks over the cached result, their id sets gated
+    * on the row counts of its persisted node frames. */
+  private[graft] def kgIntegrity(s: SparkSession, d: String): DataFrame = {
+    val r = kg(s, d)
+    graft.sink.GraphSink.integrity(r, config, Some(r.entities.count()),
+      Some(r.events.count()), Some(r.chunks.count()))
+  }
+
   private def kg(s: SparkSession, d: String): graft.pipeline.KGPipeline.Result =
     kgCache.synchronized {
       kgCache.filterInPlace { case ((sess, _, _), _) =>
@@ -178,8 +186,7 @@ object SparkEntry {
       .select(col("event_id"), to_json(col("emb")).as("vec_json"))),
     "kg_event_edges" -> ((s, d) => kg(s, d).eventEdges
       .select("head_id", "tail_id", "relation_type", "n_sources")),
-    "kg_integrity" -> ((s, d) =>
-      withZeroAnchor(graft.sink.GraphSink.integrity(kg(s, d), config))),
+    "kg_integrity" -> ((s, d) => withZeroAnchor(kgIntegrity(s, d))),
     // extraction evidence invariants (the last trust-the-ScalaTest gap
     // on the extraction side): every mention surface occurs in its
     // chunk's normalized content, and every triple endpoint appears

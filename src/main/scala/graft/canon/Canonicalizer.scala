@@ -151,8 +151,9 @@ object Canonicalizer {
     // set, representative merge) and sits on top of the whole
     // chunk->extract subtree — without the persist that subtree executes
     // once per consumer. One row per distinct normalized name; spills to
-    // disk at web scale.
-    val names = graft.pipeline.Jobs.named(spark, "canon: distinct-name agg (G12)") {
+    // disk at web scale. Counted in its own job, for the verify's gate.
+    val (names, nNames) = graft.pipeline.Jobs.countedCheckpoint(spark,
+        "canon: distinct-name agg (G12)") {
       partial
         .groupBy("name_key")
         .agg(
@@ -172,7 +173,6 @@ object Canonicalizer {
         // checkpoint stays ~256 B/row slimmer.
         .withColumn("bands",
           bandsUdf(cfg.nameBands, cfg.nameRows)(col("display_name")))
-        .localCheckpoint(true)
     }
 
     // raw surface -> normalized key, recovered from the aggregated
@@ -200,49 +200,24 @@ object Canonicalizer {
     val bandMembers = banded0.groupBy("band")
       .agg(BoundedAgg.allOrNothing[String](col("name_key"), maxBandSize).as("ms"))
     val candPairs = Blocking.pairs(bandMembers, "src", "dst").distinct()
-    // embedding attach for the exact verify. The embedding is a CHEAP
-    // deterministic function of display_name (one hash-fold per
-    // character), so the verify needs only a (name_key, display_name)
-    // lookup — a NARROW two-column map:
-    //  - small vocabulary (row count within the name-map broadcast
-    //    budget — same width class): broadcast the display map twice
-    //    and recompute the embedding INLINE on the candidate pairs.
-    //    Zero extra exchanges — the alternative sort-merge joins cost
-    //    four latency-bound stages on a vocabulary-sized stream
-    //    (measured ~4 s fixed per run at 404k names regardless of
-    //    parallelism);
-    //  - web-scale vocabulary (above the budget): shuffle-join the
-    //    (name_key, embedding) form as before — the embed UDF runs
-    //    once per name per join side, still cheaper than shipping
-    //    every banded copy of the vector. A 64-float embedding row is
-    //    wider than a display-map row, so above the display map's cap
-    //    the embedding lookup never broadcasts.
-    // Both endpoint attaches reference ONE un-renamed lookup subtree and
-    // join with explicit conditions, so ReuseExchange builds/ships the
-    // broadcast (or the shuffle of the lookup side) ONCE per run — the
-    // former per-side withColumnRenamed made the two build plans
-    // distinct and paid the build twice (round-5 ADVICE finding; the
-    // same defect the triple-rewrite hunk fixed).
-    val nNames = names.count()
-    val candidates =
-      if (nNames <= cfg.broadcastNameMapMax) {
-        val disp = broadcast(names.select(col("name_key"), col("display_name")))
-        candPairs
-          .join(disp, col("src") === col("name_key"))
-          .withColumnRenamed("display_name", "da").drop("name_key")
-          .join(disp, col("dst") === col("name_key"))
-          .withColumnRenamed("display_name", "db").drop("name_key")
-          .withColumn("ea", embedUdf(col("da")))
-          .withColumn("eb", embedUdf(col("db")))
-      } else {
-        val embs = names.select(col("name_key"),
-          embedUdf(col("display_name")).as("embedding"))
-        candPairs
-          .join(embs, col("src") === col("name_key"))
-          .withColumnRenamed("embedding", "ea").drop("name_key")
-          .join(embs, col("dst") === col("name_key"))
-          .withColumnRenamed("embedding", "eb").drop("name_key")
-      }
+    // The exact verify joins ONE narrow (name_key, display_name) lookup
+    // and recomputes the embedding INLINE (a cheap deterministic function
+    // of display_name) instead of shipping 64-float vectors. Both endpoint
+    // joins reference the one un-renamed subtree with explicit
+    // conditions, so ReuseExchange builds and ships it ONCE. The gate
+    // hints a broadcast from the checkpoint's count; above the cap Spark
+    // decides. The hint stays although AQE converts at runtime: unhinted,
+    // the in-memory path shuffled the candidate side first (+2 shuffle
+    // exchanges at 2,000 pages, +3 at 100,000) before AQE broadcast.
+    val disp = graft.GraftConfig.broadcastGate(
+      names.select(col("name_key"), col("display_name")), Some(nNames), cfg)
+    val candidates = candPairs
+      .join(disp, col("src") === col("name_key"))
+      .withColumnRenamed("display_name", "da").drop("name_key")
+      .join(disp, col("dst") === col("name_key"))
+      .withColumnRenamed("display_name", "db").drop("name_key")
+      .withColumn("ea", embedUdf(col("da")))
+      .withColumn("eb", embedUdf(col("db")))
     // checkpointed: the verify join sits on the banding self-join; its
     // output (vocabulary-bounded edge list) feeds CC, the CC vertex
     // cover, and — through comps — both the entity agg and the name
@@ -338,9 +313,14 @@ object Canonicalizer {
     val buckets = emb
       .select(col("event_id"), explode(HyperplaneLSH.keys(col("emb"))).as("bucket"))
       .groupBy("bucket").agg(collect_list(col("event_id")).as("ms"))
+    // ONE un-renamed lookup for both verify joins, broadcast (it holds
+    // at most the KB's 28 representatives): one build serves both
+    val lookup = broadcast(emb)
     val verified = Blocking.pairs(buckets, "a", "b").distinct()
-      .join(emb.select(col("event_id").as("a"), col("emb").as("ea")), "a")
-      .join(emb.select(col("event_id").as("b"), col("emb").as("eb")), "b")
+      .join(lookup, col("a") === col("event_id"))
+      .withColumnRenamed("emb", "ea").drop("event_id")
+      .join(lookup, col("b") === col("event_id"))
+      .withColumnRenamed("emb", "eb").drop("event_id")
       .select(col("a"), col("b"), CosineSimilarity(col("ea"), col("eb")).as("cos"))
       .filter(col("cos") >= cutoff)
     // both orientations of each verified pair
@@ -362,25 +342,23 @@ object Canonicalizer {
     * would funnel millions of rows into a handful of groups with
     * unbounded map-side set state — the same hot-key pattern as G12.
     *
-    * Above `cfg.broadcastNameMapMax` name-map rows the endpoint joins
-    * fall back to shuffle joins (a broadcast table must fit executor
-    * memory); below it the map broadcasts and the (much larger) triple
-    * stream never shuffles before the edge aggregate — the same
-    * dictionary-broadcast rule the extraction stage uses. ~5M rows ≈
-    * low hundreds of MB. */
+    * `nameMapRows` (the caller's count of `nameMap`, if it has one)
+    * feeds the broadcast gate: a map within its cap broadcasts, so the
+    * (much larger) triple stream never shuffles before the edge
+    * aggregate — the same dictionary-broadcast rule the extraction stage
+    * uses. ~5M rows ≈ low hundreds of MB. A larger or unknown count
+    * leaves the joins to Spark. */
   def rewriteTriples(triples: DataFrame, nameMap: DataFrame,
+      nameMapRows: Option[Long],
       cfg: graft.GraftConfig = graft.GraftConfig.default): DataFrame = {
     val (listCap, salts) = (cfg.listCap, cfg.salts)
-    // nameMap is checkpointed by the callers, so the count is a cheap
-    // metadata-ish job, not a recompute of the canonicalization DAG
-    val small = nameMap.count() <= cfg.broadcastNameMapMax
-    def side(m: DataFrame): DataFrame = if (small) broadcast(m) else m
     // ONE map subtree referenced by both endpoint joins: the two build
     // sides are canonically identical plans, so ReuseExchange ships and
     // builds the broadcast (or shuffle) ONCE — the previous per-endpoint
     // projections (aliased to subj/obj) defeated exchange reuse and paid
     // the driver-side broadcast build twice per run.
-    val bmap = side(nameMap.select(col("entity_name"), col("canonical_id")))
+    val bmap = graft.GraftConfig.broadcastGate(
+      nameMap.select(col("entity_name"), col("canonical_id")), nameMapRows, cfg)
     triples
       .join(bmap, col("subj") === col("entity_name"))
       .withColumnRenamed("canonical_id", "subj_id")

@@ -77,7 +77,7 @@ object DedupOps {
       n: Int = 3, minJaccard: Double = 0.25,
       maxDocFreq: Long = 1000L): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val sh = wordShingles(docs, n).cache()
+    val sh = wordShingles(docs, n)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
     // ONE shuffle of the shingle stream: each shingle groups to its full
     // doc list through the all-or-nothing collector (NULL = df over the
@@ -101,24 +101,18 @@ object DedupOps {
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("inter_rare"))
     // Shingles the cap DROPPED (ms IS NULL) are missing from that
-    // stream, yet the exact verify must count them too. Branch on their
-    // existence DRIVER-SIDE (one cheap agg over the cached shingles):
-    // in the common no-overflow case inter IS the grouped pair count —
-    // no verify join at all; with overflows, fall back to the full
-    // join-back verify (referencing interRare from a second lazy
-    // subtree would re-execute its whole explode+agg per reference).
-    val hasHot = !grouped.filter(col("ms").isNull).isEmpty
-    val inter =
-      if (!hasHot) interRare.withColumnRenamed("inter_rare", "inter")
-      else {
-        val cands = interRare.select("doc_a", "doc_b")
-        cands
-          .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-          .join(sh.select(col("doc_id").as("doc_b"), col("shingle")),
-            Seq("doc_b", "shingle"))
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("inter"))
-      }
+    // stream, yet the exact verify must count them too: each candidate
+    // adds the over-cap shingles both its docs hold. With none dropped,
+    // AQE's empty-relation propagation removes this branch at runtime.
+    val hot = sh.join(grouped.filter(col("ms").isNull).select("shingle"), "shingle")
+    val interHot = interRare.select("doc_a", "doc_b")
+      .join(hot.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
+      .join(hot.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("inter_hot"))
+    val inter = interRare.join(interHot, Seq("doc_a", "doc_b"), "left")
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter_rare") + coalesce(col("inter_hot"), lit(0L))).as("inter"))
     inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("set_size", "size_a"), Seq("doc_a"))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Names the Spark jobs an eager pipeline action launches, so job-level
   * profiles (Spark UI, Bench's GRAFT_KG_JOBS listener) attribute wall
@@ -11,5 +12,15 @@ object Jobs {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(description)
     try f finally sc.setJobDescription(prev) // restore enclosing scope's label
+  }
+
+  /** An eager `localCheckpoint` under `description` that also returns
+    * its row count, counted inside the checkpoint's own job by
+    * `Dataset.observe` (reading the observation launches no job). */
+  def countedCheckpoint(spark: SparkSession, description: String)
+      (df: => DataFrame): (DataFrame, Long) = named(spark, description) {
+    val obs = Observation()
+    val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+    (cp, obs.get("rows").asInstanceOf[Long])
   }
 }

@@ -290,36 +290,39 @@ object KGPipeline {
   /** The KG DAG from the chunks extraction reads to the graph tables,
     * built once: each named frame, in dependency order, passes through
     * `stage`, and later frames read what it returned ([[runOnPages]]
-    * checkpoints the name map, [[KGJob]] commits every frame). Extraction
-    * and canonicalization are lazy, so a hook serving a committed stage
+    * checkpoints the name map, [[KGJob]] commits every frame), with the
+    * frame's row count when the hook knows it without a job (the name
+    * map's feeds the endpoint rewrite's broadcast gate). Extraction and
+    * canonicalization are lazy, so a hook serving a committed stage
     * never builds the extractor or runs the canonicalizer's jobs. */
   final class Graph(chunks: Dataset[ChunkRow], cfg: graft.GraftConfig,
-      stage: String => (=> DataFrame) => DataFrame,
+      stage: String => (=> DataFrame) => (DataFrame, Option[Long]),
       stageDir: Option[String] = None) {
+    private def frame(name: String)(df: => DataFrame): DataFrame = stage(name)(df)._1
     lazy val extraction = extract(chunks.sparkSession, chunks, stageDir)
-    val mentions = stage("mentions")(extraction.mentions)
-    val triples = stage("triples")(extraction.triples)
-    val events = stage("events")(extraction.events)
-    val eventEdges = stage("event_edges")(KGPipeline.eventEdges(events, extraction.eventRels))
+    val mentions = frame("mentions")(extraction.mentions)
+    val triples = frame("triples")(extraction.triples)
+    val events = frame("events")(extraction.events)
+    val eventEdges = frame("event_edges")(KGPipeline.eventEdges(events, extraction.eventRels))
     // chunkId in mentions/triples refers to the distinct chunk; re-join
     // provenance (all urls containing the chunk) happens on demand
     private lazy val canonical = Canonicalizer.canonicalize(
       mentions.withColumnRenamed("chunk_id", "chunkId"), cfg)
-    val entities = stage("entities")(canonical._1)
-    val nameMap = stage("name_map")(canonical._2)
-    val edges = stage("edges")(Canonicalizer.rewriteTriples(
-      triples.withColumnRenamed("chunk_id", "chunkId"), nameMap, cfg))
+    val entities = frame("entities")(canonical._1)
+    val (nameMap, nameMapRows) = stage("name_map")(canonical._2)
+    val edges = frame("edges")(Canonicalizer.rewriteTriples(
+      triples.withColumnRenamed("chunk_id", "chunkId"), nameMap, nameMapRows, cfg))
     // G7 PARTICIPATES_IN: explode participants, resolve through the
     // canonical map (inner join drops names killed by the filters —
     // Cypher MATCH semantics, reference event_graphrag_neo4j.py:479-558)
-    val participates = stage("participates") {
+    val participates = frame("participates") {
       events.select(col("event_id"), explode(col("participants")).as("entity_name"))
         .join(nameMap, "entity_name").select(col("canonical_id"), col("event_id"))
         .distinct()
     }
     // G13 event disambiguation: hyperplane-LSH candidates over content
     // embeddings, cosine >= cutoff (default 0.85), top-k per event
-    val eventSimilar = stage("event_similar")(
+    val eventSimilar = frame("event_similar")(
       Canonicalizer.eventKnn(events, cfg.eventKnnTopK, cfg.eventKnnCutoff))
   }
 
@@ -343,11 +346,12 @@ object KGPipeline {
       cfg: graft.GraftConfig = graft.GraftConfig.default): Result = {
     // nameMap feeds three joins (subj/obj endpoint rewrite +
     // participant resolution) — checkpoint it so the canonicalization
-    // subtree computes once per action; every other frame stays a plan
-    def inMemory(name: String)(df: => DataFrame): DataFrame =
-      if (name == "name_map")
-        Jobs.named(spark, "canon: nameMap checkpoint")(df.localCheckpoint(true))
-      else df
+    // subtree computes once per action, counted in the checkpoint's own
+    // job; every other frame stays a plan of unknown size
+    def inMemory(name: String)(df: => DataFrame): (DataFrame, Option[Long]) =
+      if (name != "name_map") (df, None)
+      else Jobs.countedCheckpoint(spark, "canon: nameMap checkpoint")(df) match {
+        case (cp, n) => (cp, Some(n)) }
     val chunks = chunk(pages, fromHtml)
     val g = new Graph(chunks, cfg, inMemory, stageDir)
     Result(pages, chunks, g.mentions, g.triples, g.events, g.entities,

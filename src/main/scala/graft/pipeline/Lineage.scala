@@ -347,9 +347,10 @@ object KGJob {
       // deterministically inside extract (min_by content_hash)
       chunks.dropDuplicates("content_hash")
     }
-    new KGPipeline.Graph(distinct.as[KGPipeline.ChunkRow], cfg, name =>
-      lin.stage(name, requires.getOrElse(name, Nil),
-        if (tuned(name)) cfgFp else "")(_))
+    // each stage's count is its footer sum
+    new KGPipeline.Graph(distinct.as[KGPipeline.ChunkRow], cfg, name => df =>
+      (lin.stage(name, requires.getOrElse(name, Nil), if (tuned(name)) cfgFp else "")(df),
+        Some(lin.rows(name))))
     Seq("pages", "chunks", "mentions", "triples", "events", "event_edges",
       "entities", "edges", "participates", "event_similar")
       .map(s => s -> lin.rows(s))

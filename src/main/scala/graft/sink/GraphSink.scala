@@ -1,5 +1,6 @@
 package graft.sink
 
+import graft.GraftConfig.broadcastGate
 import graft.pipeline.KGPipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -127,30 +128,22 @@ object GraphSink {
     * Emitted as data rows so the driver's oracle can recompute each
     * count independently from the dumped tables — a violations>0 row
     * or a Spark-vs-DuckDB join-semantics divergence both break the
-    * correctness gate. The id-set broadcasts are gated on the run's
-    * `cfg.broadcastNameMapMax`. */
-  def integrity(r: KGPipeline.Result, cfg: graft.GraftConfig): DataFrame = {
-    // Each small side is ONE un-renamed subtree per id space (ents 3x,
-    // evs 5x, chs 2x), joined with explicit conditions: the former
-    // per-check withColumnRenamed made every build side a distinct
-    // canonical plan, so each anti-join rebuilt (and re-shuffled or
-    // re-broadcast) it — ReuseExchange now builds each id set once for
-    // the whole 11-check union (guide §2.4; the same defect the
-    // round-5 triple-rewrite fix closed). Counts are unchanged: a
-    // left_anti on `a === b` is identical to the renamed
-    // Seq-column form.
-    // Row-count-gated broadcast (the broadcastNameMapMax discipline —
-    // same single-string-column width class): under the cap each id set
-    // broadcasts once and NONE of the edge/event/triple streams shuffles
-    // for its anti-join; past it (web-scale node tables) the joins fall
-    // back to sort-merge with the reused exchange. The counts are cheap
-    // actions over persisted frames.
-    val bcap = cfg.broadcastNameMapMax
-    def gated(df: DataFrame): DataFrame =
-      if (df.count() <= bcap) broadcast(df) else df
-    val ents = gated(r.entities.select(col("canonical_id")))
-    val evs = gated(r.events.select(col("event_id")))
-    val chs = gated(r.chunks.toDF().select(col("chunk_id")).distinct())
+    * correctness gate. Each id set passes the broadcast gate with the
+    * caller's row count of its node frame (None = unknown: no hint);
+    * the chunk frame's count bounds its distinct chunk ids from above.
+    * Nothing here counts. */
+  def integrity(r: KGPipeline.Result, cfg: graft.GraftConfig,
+      entityRows: Option[Long], eventRows: Option[Long],
+      chunkRows: Option[Long]): DataFrame = {
+    // ONE un-renamed subtree per id space (ents 3x, evs 5x, chs 2x),
+    // joined with explicit conditions, so ReuseExchange builds each id
+    // set once for the whole 11-check union (guide §2.4; a per-check
+    // rename made each build side a distinct plan). Under the cap each
+    // id set broadcasts and no edge/event/triple stream shuffles for its
+    // anti-join; past it the joins sort-merge over the reused exchange.
+    val ents = broadcastGate(r.entities.select(col("canonical_id")), entityRows, cfg)
+    val evs = broadcastGate(r.events.select(col("event_id")), eventRows, cfg)
+    val chs = broadcastGate(r.chunks.toDF().select(col("chunk_id")).distinct(), chunkRows, cfg)
     Seq(
       checkCount("edges_dangling_subj", r.edges.join(
         ents, col("subj_id") === col("canonical_id"), "left_anti")),

@@ -65,9 +65,62 @@ class PlanSpec extends SparkSpec {
       .toDF("chunkId", "subj", "pred", "obj", "description")
     val nameMap = Seq(("a", 1L), ("b", 2L)).toDF("entity_name", "canonical_id")
       .localCheckpoint(true)
-    val p = plan(graft.canon.Canonicalizer.rewriteTriples(triples, nameMap))
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
+    // Spark's own size-based broadcast would pick this tiny map whatever
+    // the gate says; switched off, only the gate's hint can broadcast it
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val p = plan(graft.canon.Canonicalizer.rewriteTriples(triples, nameMap, Some(2L)))
+      assert(p.contains("BroadcastHashJoin"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+    } finally spark.conf.set(key, prev)
+  }
+
+  /** Job descriptions of the Spark jobs started while `f` runs. */
+  private def jobsDuring(f: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("<unlabelled>"))
+        ()
+      }
+    }
+    // earlier jobs' events are delivered before the listener joins
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try f finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("building the gated frames launches no hidden job") {
+    import graft.canon.Canonicalizer
+    val r = graft.pipeline.KGPipeline.run(spark, 60, partitions = 2)
+    val (nameMapRows, entityRows, eventRows, chunkRows) = (r.nameMap.count(),
+      r.entities.count(), r.events.count(), r.chunks.count())
+    // canonicalize's eager checkpoints are its only jobs, each labelled
+    val canon = jobsDuring(Canonicalizer.canonicalize(
+      r.mentions.withColumnRenamed("chunk_id", "chunkId")))
+    assert(canon.nonEmpty && canon.forall(d => d.startsWith("canon:") || d.startsWith("cc:")),
+      canon.mkString("; "))
+    val built = Seq(
+      "rewriteTriples" -> jobsDuring(Canonicalizer.rewriteTriples(
+        r.triples.withColumnRenamed("chunk_id", "chunkId"), r.nameMap, Some(nameMapRows))),
+      "integrity" -> jobsDuring(graft.sink.GraphSink.integrity(r, graft.GraftConfig.default,
+        Some(entityRows), Some(eventRows), Some(chunkRows))),
+      "jaccardPairs" -> jobsDuring(graft.dedup.DedupOps.jaccardPairs(spark, sf0001)))
+    built.foreach { case (name, jobs) =>
+      // jaccardPairs opens its input itself: the parquet read's footer
+      // (schema inference) job is the read's, not the plan's
+      val allowed = if (name == "jaccardPairs")
+        jobsDuring(graft.Tables.documents(spark, sf0001)).size else 0
+      assert(jobs.size == allowed, s"$name launched ${jobs.size} jobs: ${jobs.mkString("; ")}")
+    }
   }
 
   test("zh BM25 scoring joins stay broadcast on the query/idf side") {

@@ -66,22 +66,34 @@ class GraphSinkSpec extends SparkSpec {
       "partition under the non-default scheme was not dropped")
   }
 
-  test("integrity gates its id-set broadcasts on the run's config") {
-    // the integrity anti-joins are the only left-anti joins in the plan
-    def broadcastAntiJoins(p: SparkPlan): Int = p.collect {
-      case a: AdaptiveSparkPlanExec => broadcastAntiJoins(a.executedPlan)
-      case s: QueryStageExec => broadcastAntiJoins(s.plan)
-      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => 1
-    }.sum
-    // Spark's own size-based broadcast would pick every id set at this
-    // scale whatever the gate says; switched off, only the gate decides
+  // the integrity anti-joins are the only left-anti joins in the plan
+  private def broadcastAntiJoins(p: SparkPlan): Int = p.collect {
+    case a: AdaptiveSparkPlanExec => broadcastAntiJoins(a.executedPlan)
+    case s: QueryStageExec => broadcastAntiJoins(s.plan)
+    case j: BroadcastHashJoinExec if j.joinType == LeftAnti => 1
+  }.sum
+
+  /** Runs `f` with Spark's own size-based broadcast switched off, so
+    * that only the gate can broadcast an id set. */
+  private def gateOnly[A](f: => A): A = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
-    try {
-      val gated = GraphSink.integrity(result, graft.GraftConfig.default)
-      val shuffled = GraphSink.integrity(result,
-        graft.GraftConfig.default.copy(broadcastNameMapMax = 0L))
+    try f finally spark.conf.set(key, prev)
+  }
+
+  // the callers' row counts of the three node frames
+  private lazy val nodeRows = (Some(result.entities.count()),
+    Some(result.events.count()), Some(result.chunks.count()))
+
+  private def integrity(cfg: graft.GraftConfig, rows: (Option[Long],
+      Option[Long], Option[Long])) = GraphSink.integrity(result, cfg, rows._1, rows._2, rows._3)
+
+  test("integrity gates its id-set broadcasts on the run's config") {
+    gateOnly {
+      val gated = integrity(graft.GraftConfig.default, nodeRows)
+      val shuffled = integrity(
+        graft.GraftConfig.default.copy(broadcastNameMapMax = 0L), nodeRows)
       val rows = gated.collect().map(_.toString).sorted.toSeq
       assert(rows.size == 11)
       assert(shuffled.collect().map(_.toString).sorted.toSeq == rows)
@@ -89,7 +101,17 @@ class GraphSinkSpec extends SparkSpec {
         "the default cap broadcast no id set — the plan check is vacuous")
       assert(broadcastAntiJoins(shuffled.queryExecution.executedPlan) == 0,
         shuffled.queryExecution.executedPlan.toString)
-    } finally spark.conf.set(key, prev)
+    }
+  }
+
+  test("integrity adds no broadcast hint for an unknown count") {
+    gateOnly {
+      val unknown = integrity(graft.GraftConfig.default, (None, None, None))
+      assert(unknown.collect().map(_.toString).sorted.toSeq ==
+        integrity(graft.GraftConfig.default, nodeRows).collect().map(_.toString).sorted.toSeq)
+      assert(broadcastAntiJoins(unknown.queryExecution.executedPlan) == 0,
+        unknown.queryExecution.executedPlan.toString)
+    }
   }
 
   test("stats counts each class without projecting a payload column") {

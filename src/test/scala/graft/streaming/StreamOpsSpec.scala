@@ -100,7 +100,7 @@ class StreamOpsSpec extends SparkSpec {
       "canonical entities diverge")
     val nm = nm0.localCheckpoint(true)
     val edges = graft.canon.Canonicalizer.rewriteTriples(
-      cons.triples.withColumnRenamed("chunk_id", "chunkId"), nm)
+      cons.triples.withColumnRenamed("chunk_id", "chunkId"), nm, Some(nm.count()))
     val eCols = Seq("subj_id", "pred", "obj_id", "n_sources")
     assert(setOf(edges.select(eCols.head, eCols.tail: _*))
       == setOf(batch.edges.select(eCols.head, eCols.tail: _*)),
