@@ -147,8 +147,9 @@ object Canonicalizer {
         BoundedAgg.distinctMin(col("entityDescription"), listCap).as("descriptions"),
         BoundedAgg.distinctMin(col("chunkId"), listCap).as("source_chunks"))
 
-    // persisted: `names` feeds three consumers (LSH banding, CC vertex
-    // set, representative merge) and sits on top of the whole
+    // persisted: `names` feeds three consumers (LSH banding, verify
+    // lookup, CC vertex join — which the representative merge and the
+    // name map both read) and sits on top of the whole
     // chunk->extract subtree — without the persist that subtree executes
     // once per consumer. One row per distinct normalized name; spills to
     // disk at web scale. Counted in its own job, for the verify's gate.
@@ -174,11 +175,6 @@ object Canonicalizer {
         .withColumn("bands",
           bandsUdf(cfg.nameBands, cfg.nameRows)(col("display_name")))
     }
-
-    // raw surface -> normalized key, recovered from the aggregated
-    // alias sets (tiny) instead of re-exploding the mention stream
-    val rawKeys = names
-      .select(col("name_key"), explode(col("aliases")).as("entityName"))
 
     // ---- G9 MinHash-LSH candidates + cosine verify ---------------------
     // hot-band guard (SURVEY.md §4.3): a band key shared by k names
@@ -218,49 +214,39 @@ object Canonicalizer {
       .withColumnRenamed("display_name", "db").drop("name_key")
       .withColumn("ea", embedUdf(col("da")))
       .withColumn("eb", embedUdf(col("db")))
-    // checkpointed: the verify join sits on the banding self-join; its
-    // output (vocabulary-bounded edge list) feeds CC, the CC vertex
-    // cover, and — through comps — both the entity agg and the name
-    // map. Uncached, every consumer re-executes the whole LSH join
-    // (measured 3x ~10 s at a 60k-name vocabulary).
-    val verified = graft.pipeline.Jobs.named(spark, "canon: LSH band join + cosine verify (G9)") {
-      candidates
-        .withColumn("cos", CosineSimilarity(col("ea"), col("eb")))
-        .filter(col("cos") >= mergeThreshold)
-        .select("src", "dst")
-        .localCheckpoint(true)
-    }
+    val verified = candidates
+      .withColumn("cos", CosineSimilarity(col("ea"), col("eb")))
+      .filter(col("cos") >= mergeThreshold)
+      .select("src", "dst")
 
     // ---- G10 connected components --------------------------------------
-    // comps checkpointed for the same reason: entity agg + name map
-    // both join through it
-    val comps = graft.pipeline.Jobs.named(spark, "canon: connected components (G10)") {
-      ConnectedComponents.runWithVertices(
-        verified, names.select(col("name_key").as("id")),
-        localSolveMax = cfg.ccLocalSolveMax)
-        .localCheckpoint(true)
+    // CC checkpoints the deduped verified edges once (the LSH band join
+    // runs in that job, hence the G9 label) and adds each name's
+    // component to `names`; the merge and the name map both read it
+    val withComp = graft.pipeline.Jobs.named(spark, "canon: LSH band join + cosine verify (G9)") {
+      ConnectedComponents.components(verified,
+        names.withColumnRenamed("name_key", "id"), cfg.ccLocalSolveMax)
     }
 
     // ---- G11 representative merge ---------------------------------------
-    val withComp = names.join(
-      comps.withColumnRenamed("id", "name_key"), "name_key")
     val canonical = withComp
       .groupBy(col("component").as("canonical_id"))
       .agg(
-        max_by(col("display_name"), struct(col("n_mentions"), col("name_key"))).as("entity_name"),
-        max_by(col("entity_type"), struct(col("n_mentions"), col("name_key"))).as("entity_type"),
+        max_by(col("display_name"), struct(col("n_mentions"), col("id"))).as("entity_name"),
+        max_by(col("entity_type"), struct(col("n_mentions"), col("id"))).as("entity_type"),
         sum("n_mentions").as("n_mentions"),
         count(lit(1)).as("n_merged_names"),
         BoundedAgg.distinctMinFlat(col("aliases"), listCap).as("aliases"),
         BoundedAgg.distinctMinFlat(col("descriptions"), listCap).as("descriptions"),
         BoundedAgg.distinctMinFlat(col("source_chunks"), listCap).as("source_chunks"))
 
-    // raw name -> canonical id (for triple endpoint rewrite); name_key
-    // rides along so the driver oracle can recompute the G12 merge and
-    // the CC min-representative invariant from the dumped map
-    val nameMap = rawKeys
-      .join(comps.withColumnRenamed("id", "name_key"), "name_key")
-      .select(col("entityName").as("entity_name"), col("name_key"),
+    // raw name -> canonical id (for triple endpoint rewrite), recovered
+    // from each name's alias set (tiny) instead of re-exploding the
+    // mention stream; name_key rides along so the driver oracle can
+    // recompute the G12 merge and the CC min-representative invariant
+    // from the dumped map
+    val nameMap = withComp
+      .select(explode(col("aliases")).as("entity_name"), col("id").as("name_key"),
         col("component").as("canonical_id"))
 
     (canonical, nameMap)

@@ -1,7 +1,9 @@
 package graft.canon
 
-import org.apache.spark.sql.DataFrame
+import graft.pipeline.Jobs
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Connected components over a DataFrame edge list via the
   * large-star / small-star algorithm (Kiveris et al., "Connected
@@ -15,13 +17,13 @@ import org.apache.spark.sql.functions._
   * (reference Base_Neo4j.py:637-712; SURVEY.md G10 documents why CC is
   * the faithful simplification at the 0.95 threshold).
   *
-  * Input: edges with columns (src, dst) of any orderable type.
-  * Output: (id, component) where component = min id in the component;
-  * covers every id appearing in the edge list.
+  * One entry point, [[components]]: edges (src, dst) of any orderable
+  * type and a vertex frame keyed by `id` in; the vertex frame with
+  * each vertex's component (the min id in it) out.
   */
 object ConnectedComponents {
 
-  /** Below this edge count the component graph is solved on the driver
+  /** At or under this edge count the component graph is solved on the driver
     * with union-find instead of the O(log n)-round distributed
     * fixpoint: each distributed round costs 2+ shuffles, which is pure
     * overhead on the small post-LSH entity graphs, while 500k edges is
@@ -47,9 +49,37 @@ object ConnectedComponents {
     }
   }
 
-  def run(edgesIn: DataFrame, maxIter: Int = 50,
-      localSolveMax: Long = LocalSolveMax): DataFrame = {
-    val spark = edgesIn.sparkSession
+  /** Round cap of the distributed fixpoint; it converges in O(log n). */
+  private val MaxRounds = 50
+
+  /** `vertices` (an `id` column plus any payload columns, id first in
+    * the output) with a `component` column added: the min id of the
+    * vertex's component over `edges` (src, dst). An id that no non-loop
+    * edge touches is its own component; edge endpoints that are not in
+    * `vertices` are dropped.
+    *
+    * The deduped non-loop edges are checkpointed ONCE, under the
+    * caller's job label, and counted in that same job. At or under
+    * `localSolveMax` edges the checkpoint is collected and solved on the
+    * driver; above it the star rounds start from that same checkpoint. */
+  def components(edges: DataFrame, vertices: DataFrame,
+      localSolveMax: Long): DataFrame = {
+    val spark = edges.sparkSession
+    val (deduped, n) = Jobs.countedCheckpoint(
+      edges.filter(col("src") =!= col("dst")).select("src", "dst").distinct())
+    val map =
+      if (n <= localSolveMax) localSolve(spark,
+        Jobs.named(spark, "cc: edge collect for the driver union-find")(deduped.collect()),
+        deduped.schema("src").dataType)
+      else starRounds(deduped)
+    vertices.join(map, Seq("id"), "left")
+      .withColumn("component", coalesce(col("component"), col("id")))
+  }
+
+  /** Large-star / small-star rounds from the deduped edge checkpoint to
+    * the (id, component) map of every id an edge touches. */
+  private def starRounds(deduped: DataFrame): DataFrame = {
+    val spark = deduped.sparkSession
 
     // NO distinct here: `min`/`least` aggregates are multiplicity-
     // insensitive and the one end-of-round distinct (in the small-star
@@ -65,112 +95,77 @@ object ConnectedComponents {
         .union(e.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst"))
 
-    // Single-job size gate: fetch up to localSolveMax+1 deduped edges.
-    // On the small post-LSH entity graphs (every test/bench scale) this
-    // replaces checkpoint + count + collect — three sequential driver
-    // barriers — with ONE job; past the cap it costs one bounded fetch
-    // (CollectLimitExec stops pulling partitions once the limit is hit)
-    // before the O(log n)-round distributed fixpoint takes over.
-    val deduped = edgesIn.filter(col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
-    val gateN = math.min(localSolveMax, Int.MaxValue - 1L).toInt
-    val grabbed = graft.pipeline.Jobs.named(spark,
-      "cc: LSH-verify + size gate (single-job local path)") {
-      deduped.limit(gateN + 1).collect()
-    }
-    if (grabbed.length <= gateN) {
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc] path=local edges=${grabbed.length} gate=$gateN")
-      return localSolve(edgesIn, grabbed, deduped.schema("src").dataType)
-    }
-    if (sys.env.contains("GRAFT_CC_VERBOSE"))
-      System.err.println(s"[cc] path=distributed edges>gate=$gateN")
-
-    var edges = graft.pipeline.Jobs.named(spark, "cc: edge dedup checkpoint") {
-      deduped.localCheckpoint(true)
-    }
-
+    var edges = deduped
     var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // --- large-star over the symmetrized view: for each u,
-      //     m = min(u, min neighbor); attach every neighbor v > u to m
-      val sym = symmetrize(edges)
-      val minN = sym.groupBy("src").agg(min("dst").as("mn"))
-      val large = sym.join(minN, "src")
-        .select(col("dst").as("u"),
-          least(col("src"), col("mn")).as("v"))
-        .filter(col("u") > col("src"))  // v > u per the paper
-        .select(col("u").as("src"), col("v").as("dst"))
-        .filter(col("src") =!= col("dst"))
+    var round = 0
+    while (!converged && round < MaxRounds) {
+      round += 1
+      Jobs.named(spark, s"cc: round $round star passes") {
+        // --- large-star over the symmetrized view: for each u,
+        //     m = min(u, min neighbor); attach every neighbor v > u to m
+        val sym = symmetrize(edges)
+        val minN = sym.groupBy("src").agg(min("dst").as("mn"))
+        val large = sym.join(minN, "src")
+          .select(col("dst").as("u"),
+            least(col("src"), col("mn")).as("v"))
+          .filter(col("u") > col("src"))  // v > u per the paper
+          .select(col("u").as("src"), col("v").as("dst"))
+          .filter(col("src") =!= col("dst"))
 
-      // --- small-star over edges oriented high -> low (dups ride
-      // through: min() below ignores multiplicity, the round-end
-      // distinct dedups the attach rows)
-      val oriented = large
-        .select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-      val minLow = oriented.groupBy("src").agg(min("dst").as("mn"))
-      // attach every low neighbor and u itself to m = min(lows ∪ {u})
-      val attachLows = oriented.join(minLow, "src")
-        .select(col("dst").as("u"), least(col("mn"), col("src")).as("v"))
-      val attachSelf = minLow
-        .select(col("src").as("u"), least(col("mn"), col("src")).as("v"))
-      val small = graft.pipeline.Jobs.named(spark, s"cc: round ${iter + 1} star passes") {
-        attachLows.union(attachSelf)
+        // --- small-star over edges oriented high -> low (dups ride
+        // through: min() below ignores multiplicity, the round-end
+        // distinct dedups the attach rows)
+        val oriented = large
+          .select(greatest(col("src"), col("dst")).as("src"),
+            least(col("src"), col("dst")).as("dst"))
+        val minLow = oriented.groupBy("src").agg(min("dst").as("mn"))
+        // attach every low neighbor and u itself to m = min(lows ∪ {u})
+        val attachLows = oriented.join(minLow, "src")
+          .select(col("dst").as("u"), least(col("mn"), col("src")).as("v"))
+        val attachSelf = minLow
+          .select(col("src").as("u"), least(col("mn"), col("src")).as("v"))
+        val small = attachLows.union(attachSelf)
           .filter(col("u") =!= col("v"))
           .select(col("u").as("src"), col("v").as("dst"))
           .distinct()
           .localCheckpoint(true)  // cut lineage every round
-      }
 
-      // convergence: edge set stable under (count, xor-of-hashes) —
-      // xor is order-independent and cannot overflow under ANSI mode.
-      // Both sides signed in ONE union job (each driver barrier costs
-      // more than the data at vocabulary scale).
-      val t0 = System.nanoTime()
-      val sigRows = edges.select(lit(0).as("side"), col("src"), col("dst"))
-        .union(small.select(lit(1).as("side"), col("src"), col("dst")))
-        .groupBy("side")
-        .agg(count(lit(1)).as("n"), expr("bit_xor(xxhash64(src, dst))").as("h"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.get(2))).toMap
-      val sig = sigRows.get(1)
-      val prevSig = sigRows.get(0)
-      converged = sig == prevSig
-      edges = small
-      iter += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE")) {
-        System.err.println(f"[cc] iter $iter sig=$sig prev=$prevSig " +
-          f"sigTime=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        // convergence: edge set stable under (count, xor-of-hashes) —
+        // xor is order-independent and cannot overflow under ANSI mode.
+        // Both sides signed in ONE union job (each driver barrier costs
+        // more than the data at vocabulary scale).
+        val sig = edges.select(lit(0).as("side"), col("src"), col("dst"))
+          .union(small.select(lit(1).as("side"), col("src"), col("dst")))
+          .groupBy("side")
+          .agg(count(lit(1)).as("n"), expr("bit_xor(xxhash64(src, dst))").as("h"))
+          .collect().map(r => r.getInt(0) -> (r.getLong(1), r.get(2))).toMap
+        converged = sig.get(1) == sig.get(0)
+        edges = small
       }
     }
 
-    // final star edges: every node points at its root; roots self-map;
-    // vertices that only appeared in dropped self-loops stay singletons
-    val members = edges.select(col("src").as("id"), col("dst").as("component"))
-    val roots = edges.select(col("dst").as("id"), col("dst").as("component"))
-    val verts = edgesIn.select(col("src").as("id"))
-      .union(edgesIn.select(col("dst").as("id")))
-      .distinct()
-      .select(col("id"), col("id").as("component"))
-    members.union(roots).union(verts)
-      .groupBy("id").agg(min("component").as("component"))
+    // final star edges: every node points at its root; roots self-map.
+    // Checkpointed: the caller's consumers each read the vertex join.
+    Jobs.named(spark, "cc: component map checkpoint") {
+      edges.select(col("src").as("id"), col("dst").as("component"))
+        .union(edges.select(col("dst").as("id"), col("dst").as("component")))
+        .groupBy("id").agg(min("component").as("component"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Driver-side union-find over an already-collected deduped edge
     * list (the size-gated fast path). Component representative is the
     * min id under the same ordering Spark's `min` uses for the column
     * type, so both paths produce identical output. */
-  private def localSolve(edgesIn: DataFrame,
-      collected: Array[org.apache.spark.sql.Row],
-      dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = edgesIn.sparkSession
+  private def localSolve(spark: SparkSession, collected: Array[Row],
+      dt: DataType): DataFrame = {
     // must match the ordering the distributed path's min() uses:
     // strings compare in UTF-8/code-point order (Java compareTo
     // disagrees on supplementary-plane chars); other orderable types
     // via their natural Comparable order
     val lt: (Any, Any) => Boolean = dt match {
-      case org.apache.spark.sql.types.StringType =>
+      case StringType =>
         (a, b) => graft.text.Chars.utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
       case _ =>
         (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
@@ -190,27 +185,9 @@ object ConnectedComponents {
     val ids = parent.keySet ++ parent.values
     // second pass: representative = min member (union order above keeps
     // roots minimal already since we always parent the larger root)
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](ids.size)
-    ids.foreach(id => rows.add(org.apache.spark.sql.Row(id, find(id))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", dt),
-      org.apache.spark.sql.types.StructField("component", dt)))
-    val local = spark.createDataFrame(rows, schema)
-    // vertices that only appeared in self-loops stay singletons
-    val verts = edgesIn.select(col("src").as("id"))
-      .union(edgesIn.select(col("dst").as("id")))
-      .distinct()
-      .select(col("id"), col("id").as("component"))
-    local.union(verts).groupBy("id").agg(min("component").as("component"))
-  }
-
-  /** Components including singleton vertices from `vertices(id)`. */
-  def runWithVertices(edges: DataFrame, vertices: DataFrame,
-      localSolveMax: Long = LocalSolveMax): DataFrame = {
-    val cc = run(edges, localSolveMax = localSolveMax)
-    vertices.select(col("id"))
-      .join(cc, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("component"))
+    val rows = new java.util.ArrayList[Row](ids.size)
+    ids.foreach(id => rows.add(Row(id, find(id))))
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", dt), StructField("component", dt))))
   }
 }

@@ -14,13 +14,17 @@ object Jobs {
     try f finally sc.setJobDescription(prev) // restore enclosing scope's label
   }
 
-  /** An eager `localCheckpoint` under `description` that also returns
-    * its row count, counted inside the checkpoint's own job by
-    * `Dataset.observe` (reading the observation launches no job). */
-  def countedCheckpoint(spark: SparkSession, description: String)
-      (df: => DataFrame): (DataFrame, Long) = named(spark, description) {
+  /** An eager `localCheckpoint` that also returns its row count, counted
+    * inside the checkpoint's own job by `Dataset.observe` (reading the
+    * observation launches no job). The job carries the caller's label. */
+  def countedCheckpoint(df: DataFrame): (DataFrame, Long) = {
     val obs = Observation()
     val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
     (cp, obs.get("rows").asInstanceOf[Long])
   }
+
+  /** [[countedCheckpoint]] under `description`. */
+  def countedCheckpoint(spark: SparkSession, description: String)
+      (df: => DataFrame): (DataFrame, Long) =
+    named(spark, description)(countedCheckpoint(df))
 }

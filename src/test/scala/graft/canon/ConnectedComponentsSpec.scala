@@ -1,6 +1,8 @@
 package graft.canon
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import scala.util.Random
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -26,15 +28,23 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  /** Both the driver union-find fast path and the distributed
-    * large-star/small-star fixpoint (localSolveMax = 0) must match. */
+  /** Every edge endpoint, as the vertex frame. */
+  private def endpoints(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("id")).union(edges.select(col("dst").as("id"))).distinct()
+
+  /** (id -> component) over the edge endpoints, on the driver union-find
+    * fast path (local = true) or the distributed large-star/small-star
+    * fixpoint (localSolveMax = 0). */
+  private def solve(edges: DataFrame, local: Boolean): DataFrame =
+    ConnectedComponents.components(edges, endpoints(edges),
+      if (local) ConnectedComponents.LocalSolveMax else 0L)
+
+  /** Both paths must match the oracle. */
   private def check(edges: Seq[(Long, Long)]): Unit = {
     val df = edges.toDF("src", "dst")
-    val local = ConnectedComponents.run(df).as[(Long, Long)].collect().toMap
-    val dist = ConnectedComponents.run(df, localSolveMax = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(local == oracle(edges))
-    assert(dist == oracle(edges))
+    for (local <- Seq(true, false))
+      assert(solve(df, local).as[(Long, Long)].collect().toMap == oracle(edges),
+        s"local = $local")
   }
 
   test("GRAFT_CC_LOCAL_MAX: valid values parse, blank and malformed fall back") {
@@ -69,6 +79,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("two components and a self-loop") {
+    // the oracle keeps the self-loop vertex 5 as a singleton
     check(Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L), (11L, 12L)))
   }
 
@@ -86,19 +97,19 @@ class ConnectedComponentsSpec extends SparkSpec {
     val rnd = new Random(7)
     val edges = (1 to 100).map(_ => (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
       .filter(e => e._1 != e._2)
-    val a = ConnectedComponents.run(edges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    val b = ConnectedComponents.run(rnd.shuffle(edges).toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    assert(a == b)
+    val shuffled = rnd.shuffle(edges)
+    for (local <- Seq(true, false)) {
+      val a = solve(edges.toDF("src", "dst"), local).as[(Long, Long)].collect().toMap
+      val b = solve(shuffled.toDF("src", "dst"), local).as[(Long, Long)].collect().toMap
+      assert(a == b, s"local = $local")
+    }
   }
 
   test("string ids work (entity-name keyed CC), both paths") {
     val df = Seq(("b", "a"), ("c", "b"), ("x", "y")).toDF("src", "dst")
     val want = Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x")
-    val local = ConnectedComponents.run(df).as[(String, String)].collect().toMap
-    val dist = ConnectedComponents.run(df, localSolveMax = 0)
-      .as[(String, String)].collect().toMap
+    val local = solve(df, local = true).as[(String, String)].collect().toMap
+    val dist = solve(df, local = false).as[(String, String)].collect().toMap
     assert(local == want)
     assert(dist == want)
   }
@@ -111,18 +122,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     val sp1 = "𠀀" // U+20000
     val sp2 = "𠀁" // U+20001
     val df = Seq((hi, sp1), (sp1, sp2)).toDF("src", "dst")
-    val local = ConnectedComponents.run(df).as[(String, String)].collect().toMap
-    val dist = ConnectedComponents.run(df, localSolveMax = 0)
-      .as[(String, String)].collect().toMap
+    val local = solve(df, local = true).as[(String, String)].collect().toMap
+    val dist = solve(df, local = false).as[(String, String)].collect().toMap
     assert(local == dist)
     assert(local.values.toSet == Set(hi), "representative must be the UTF-8 min")
   }
 
-  test("singletons included via runWithVertices") {
+  test("an isolated vertex is its own component, both paths") {
     val edges = Seq((1L, 2L)).toDF("src", "dst")
     val verts = Seq(1L, 2L, 3L).toDF("id")
-    val got = ConnectedComponents.runWithVertices(edges, verts)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    for (max <- Seq(ConnectedComponents.LocalSolveMax, 0L)) {
+      val got = ConnectedComponents.components(edges, verts, max)
+        .as[(Long, Long)].collect().toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"localSolveMax = $max")
+    }
+  }
+
+  test("vertex payload columns come back unchanged, both paths") {
+    val edges = Seq(("b", "a"), ("c", "b"), ("y", "x")).toDF("src", "dst")
+    val verts = Seq(("a", 1, Seq("a1")), ("b", 2, Seq.empty[String]), ("c", 3, Seq("c1", "c2")),
+      ("x", 4, Seq("x1")), ("lone", 5, Seq("l"))).toDF("id", "n", "aliases")
+    val want = Set(("a", 1, Seq("a1"), "a"), ("b", 2, Seq.empty[String], "a"),
+      ("c", 3, Seq("c1", "c2"), "a"), ("x", 4, Seq("x1"), "x"), ("lone", 5, Seq("l"), "lone"))
+    for (max <- Seq(ConnectedComponents.LocalSolveMax, 0L)) {
+      val got = ConnectedComponents.components(edges, verts, max)
+      assert(got.columns.toSeq == Seq("id", "n", "aliases", "component"), s"localSolveMax = $max")
+      assert(got.as[(String, Int, Seq[String], String)].collect().toSet == want,
+        s"localSolveMax = $max")
+    }
   }
 }

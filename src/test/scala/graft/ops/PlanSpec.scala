@@ -103,11 +103,15 @@ class PlanSpec extends SparkSpec {
     val r = graft.pipeline.KGPipeline.run(spark, 60, partitions = 2)
     val (nameMapRows, entityRows, eventRows, chunkRows) = (r.nameMap.count(),
       r.entities.count(), r.events.count(), r.chunks.count())
-    // canonicalize's eager checkpoints are its only jobs, each labelled
+    // canonicalize's eager checkpoints are its only jobs, each labelled:
+    // the names checkpoint (G12), the connected components' one edge
+    // checkpoint (run under G9, whose band join it executes) and the
+    // collect of that checkpoint for the driver union-find
     val canon = jobsDuring(Canonicalizer.canonicalize(
       r.mentions.withColumnRenamed("chunk_id", "chunkId")))
-    assert(canon.nonEmpty && canon.forall(d => d.startsWith("canon:") || d.startsWith("cc:")),
-      canon.mkString("; "))
+    assert(canon.distinct.toSet == Set("canon: distinct-name agg (G12)",
+      "canon: LSH band join + cosine verify (G9)",
+      "cc: edge collect for the driver union-find"), canon.mkString("; "))
     val built = Seq(
       "rewriteTriples" -> jobsDuring(Canonicalizer.rewriteTriples(
         r.triples.withColumnRenamed("chunk_id", "chunkId"), r.nameMap, Some(nameMapRows))),
