@@ -106,9 +106,12 @@ class PlanSpec extends SparkSpec {
     // canonicalize's eager checkpoints are its only jobs, each labelled:
     // the names checkpoint (G12), the connected components' one edge
     // checkpoint (run under G9, whose band join it executes) and the
-    // collect of that checkpoint for the driver union-find
+    // collect of that checkpoint for the driver union-find. The local
+    // solve cap is pinned: GRAFT_CC_LOCAL_MAX=0 would take the distributed
+    // path, whose round labels this set does not list
     val canon = jobsDuring(Canonicalizer.canonicalize(
-      r.mentions.withColumnRenamed("chunk_id", "chunkId")))
+      r.mentions.withColumnRenamed("chunk_id", "chunkId"),
+      graft.GraftConfig.default.copy(ccLocalSolveMax = 500000L)))
     assert(canon.distinct.toSet == Set("canon: distinct-name agg (G12)",
       "canon: LSH band join + cosine verify (G9)",
       "cc: edge collect for the driver union-find"), canon.mkString("; "))

@@ -2,7 +2,7 @@
 """Compare the job traces of two sets of traced perfbench runs.
 
     python3 tools/trace_jobs.py --before A1.out A2.out A3.out \\
-        --after B1.out B2.out B3.out [--all]
+        --after B1.out B2.out B3.out
 
 Each file is the standard output of one
 `python3 perfbench/run.py --workload W --seed S --trace 1` run: its
@@ -16,8 +16,8 @@ splits some jobs differently), so every figure is printed as
 side:
 
   * jobs and wall seconds per layer, with the total over all layers;
-  * job counts per description (label), only the labels whose counts
-    differ between the sides unless --all is given.
+  * job counts per description (label), for every label either side
+    ran.
 """
 import argparse
 import collections
@@ -70,7 +70,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--before", nargs="+", required=True, help="traced runs of side A")
     ap.add_argument("--after", nargs="+", required=True, help="traced runs of side B")
-    ap.add_argument("--all", action="store_true", help="list every label, not only changed ones")
     a = ap.parse_args()
     before = [read_run(p) for p in a.before]
     after = [read_run(p) for p in a.after]
@@ -98,17 +97,11 @@ def main():
     table(["layer", "jobs before", "jobs after", "wall_s before", "wall_s after"], rows)
 
     keys = sorted({k for runs in (before, after) for r in runs for k in r[1]})
-    rows = []
-    for layer, desc in keys:
-        b = [r[1].get((layer, desc), 0) for r in before]
-        c = [r[1].get((layer, desc), 0) for r in after]
-        if a.all or sorted(b) != sorted(c):
-            rows.append([layer, spread(b, "{:g}"), spread(c, "{:g}"), desc])
+    rows = [[layer, spread([r[1].get((layer, desc), 0) for r in before], "{:g}"),
+             spread([r[1].get((layer, desc), 0) for r in after], "{:g}"), desc]
+            for layer, desc in keys]
     print()
-    if rows:
-        table(["layer", "before", "after", "label"], rows)
-    else:
-        print("every label has the same job counts on both sides")
+    table(["layer", "before", "after", "label"], rows)
 
 
 if __name__ == "__main__":
