@@ -90,7 +90,7 @@ object SparkEntry {
           triples = r.triples.persist(),
           events = r.events.persist(),
           entities = r.entities.persist(),
-          nameMap = r.nameMap.persist(),
+          // nameMap is already runOnPages' counted checkpoint
           edges = r.edges.persist(),
           // participates (explode + name-map join + distinct) and
           // eventSimilar (the event-KNN LSH self-join) were the two

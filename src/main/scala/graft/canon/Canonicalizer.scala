@@ -89,20 +89,13 @@ object Canonicalizer {
     MinHasher.bandKeys(MinHasher.signature(shingles), nameBands, nameRows)
   }
 
-  /** Mentions (entityName, entityType, entityDescription, chunkId) ->
-    * canonical entity table + name->canonical mapping.
-    *
-    * Returns (canonicalEntities, nameMap):
-    *  - canonicalEntities: canonical_id, entity_name, entity_type,
-    *    n_mentions, aliases, descriptions, source_chunks, component_id
-    *  - nameMap: entity_name (raw) -> (name_key, canonical_id)
-    */
-  def canonicalize(mentions: DataFrame,
-      cfg: graft.GraftConfig = graft.GraftConfig.default)
-      : (DataFrame, DataFrame) = {
-    val spark = mentions.sparkSession
-    val (mergeThreshold, salts) = (cfg.mergeThreshold, cfg.salts)
-    val (listCap, maxBandSize) = (cfg.listCap, cfg.maxBandSize)
+  /** G12: mentions (entityName, entityType, entityDescription, chunkId
+    * [, ord]) -> one row per normalized name (name_key, n_mentions,
+    * aliases, descriptions, source_chunks, display_name, entity_type,
+    * bands). A plan. */
+  def names(mentions: DataFrame,
+      cfg: graft.GraftConfig = graft.GraftConfig.default): DataFrame = {
+    val (salts, listCap) = (cfg.salts, cfg.listCap)
 
     // First-writer-wins semantics: the reference fixes id_/entity_type
     // at the FIRST mention's values (MERGE ... ON CREATE SET,
@@ -137,7 +130,7 @@ object Canonicalizer {
     // (display name, type) — min over the struct is the distributable
     // form of min_by(…, (chunkId, ord)) that survives the salted
     // two-phase split ((chunkId, ord) is unique, so the order is total)
-    val partial = keyed
+    keyed
       .groupBy("name_key", "salt")
       .agg(
         count(lit(1)).as("n_mentions"),
@@ -146,35 +139,41 @@ object Canonicalizer {
         sort_array(collect_set("entityName")).as("aliases"),
         BoundedAgg.distinctMin(col("entityDescription"), listCap).as("descriptions"),
         BoundedAgg.distinctMin(col("chunkId"), listCap).as("source_chunks"))
+      .groupBy("name_key")
+      .agg(
+        sum("n_mentions").as("n_mentions"),
+        min("first_w").as("first_w"),
+        array_distinct(sort_array(flatten(collect_set("aliases")))).as("aliases"),
+        BoundedAgg.distinctMinFlat(col("descriptions"), listCap).as("descriptions"),
+        BoundedAgg.distinctMinFlat(col("source_chunks"), listCap).as("source_chunks"))
+      .withColumn("display_name", col("first_w.norm_name"))
+      .withColumn("entity_type", col("first_w.entityType"))
+      .drop("first_w")
+      // bands belong to the name row, so wherever the caller materializes
+      // it the 128-minhash signature UDF runs once per name. The
+      // embedding column deliberately does NOT: it is a cheap
+      // deterministic function of display_name, recomputed at the verify
+      // site, so the materialized frame stays ~256 B/row slimmer.
+      .withColumn("bands",
+        bandsUdf(cfg.nameBands, cfg.nameRows)(col("display_name")))
+  }
 
-    // persisted: `names` feeds three consumers (LSH banding, verify
-    // lookup, CC vertex join — which the representative merge and the
-    // name map both read) and sits on top of the whole
-    // chunk->extract subtree — without the persist that subtree executes
-    // once per consumer. One row per distinct normalized name; spills to
-    // disk at web scale. Counted in its own job, for the verify's gate.
-    val (names, nNames) = graft.pipeline.Jobs.countedCheckpoint(spark,
-        "canon: distinct-name agg (G12)") {
-      partial
-        .groupBy("name_key")
-        .agg(
-          sum("n_mentions").as("n_mentions"),
-          min("first_w").as("first_w"),
-          array_distinct(sort_array(flatten(collect_set("aliases")))).as("aliases"),
-          BoundedAgg.distinctMinFlat(col("descriptions"), listCap).as("descriptions"),
-          BoundedAgg.distinctMinFlat(col("source_chunks"), listCap).as("source_chunks"))
-        .withColumn("display_name", col("first_w.norm_name"))
-        .withColumn("entity_type", col("first_w.entityType"))
-        .drop("first_w")
-        // bands materialize INSIDE the checkpoint, so the 128-minhash
-        // signature UDF runs once per name, in the checkpoint job,
-        // whatever later reads the frame. The embedding column
-        // deliberately does NOT: it is a cheap deterministic function of
-        // display_name, recomputed at the verify site (below), so the
-        // checkpoint stays ~256 B/row slimmer.
-        .withColumn("bands",
-          bandsUdf(cfg.nameBands, cfg.nameRows)(col("display_name")))
-    }
+  /** G9-G11 over [[names]]' rows -> canonical entity table + name map.
+    * Only [[ConnectedComponents]]' own checkpoints materialize here, so
+    * the caller materializes `names`, which this reads three times;
+    * `nameRows` (its count, if known) feeds the verify's broadcast gate.
+    *
+    * Returns (canonicalEntities, nameMap):
+    *  - canonicalEntities: canonical_id, entity_name, entity_type,
+    *    n_mentions, aliases, descriptions, source_chunks, component_id
+    *  - nameMap: entity_name (raw) -> (name_key, canonical_id)
+    */
+  def canonicalize(names: DataFrame, nameRows: Option[Long],
+      cfg: graft.GraftConfig = graft.GraftConfig.default)
+      : (DataFrame, DataFrame) = {
+    val spark = names.sparkSession
+    val (mergeThreshold, listCap, maxBandSize) =
+      (cfg.mergeThreshold, cfg.listCap, cfg.maxBandSize)
 
     // ---- G9 MinHash-LSH candidates + cosine verify ---------------------
     // hot-band guard (SURVEY.md §4.3): a band key shared by k names
@@ -201,12 +200,13 @@ object Canonicalizer {
     // of display_name) instead of shipping 64-float vectors. Both endpoint
     // joins reference the one un-renamed subtree with explicit
     // conditions, so ReuseExchange builds and ships it ONCE. The gate
-    // hints a broadcast from the checkpoint's count; above the cap Spark
-    // decides. The hint stays although AQE converts at runtime: unhinted,
-    // the in-memory path shuffled the candidate side first (+2 shuffle
-    // exchanges at 2,000 pages, +3 at 100,000) before AQE broadcast.
+    // hints a broadcast from the caller's count of `names`; above the cap
+    // or without a count Spark decides. The hint stays although AQE
+    // converts at runtime: unhinted, the in-memory path shuffled the
+    // candidate side first (+2 shuffle exchanges at 2,000 pages, +3 at
+    // 100,000) before AQE broadcast.
     val disp = graft.GraftConfig.broadcastGate(
-      names.select(col("name_key"), col("display_name")), Some(nNames), cfg)
+      names.select(col("name_key"), col("display_name")), nameRows, cfg)
     val candidates = candPairs
       .join(disp, col("src") === col("name_key"))
       .withColumnRenamed("display_name", "da").drop("name_key")
@@ -264,14 +264,15 @@ object Canonicalizer {
     * key), so the hash, not the widest column, is the shuffle key. */
   def eventContentKey: Column = md5(col("content")).as("ch")
 
-  /** Distinct-content representative embeddings for [[eventKnn]]: each
-    * representative embeds its lowercased content. Public so the
-    * driver can dump the SAME vectors the KNN consumed and the DuckDB
-    * oracle can recompute the similarity ranking from them. */
+  /** Distinct-content representative embeddings for [[eventKnn]]. Each
+    * event embeds its lowercased content where it is read, so no event
+    * text reaches the representative aggregate (equal contents embed
+    * equally). Public so the driver can dump the SAME vectors the KNN
+    * consumed and the DuckDB oracle can recompute the ranking from them. */
   def eventVecs(events: DataFrame): DataFrame = {
     val embedContentUdf = udf((s: String) => HashingEmbedder.embed(s.toLowerCase))
-    eventReps(events, any_value(col("content")).as("content"))
-      .select(col("rep_id").as("event_id"), embedContentUdf(col("content")).as("emb"))
+    eventReps(events.withColumn("emb", embedContentUdf(col("content"))),
+      any_value(col("emb")).as("emb")).select(col("rep_id").as("event_id"), col("emb"))
   }
 
   /** G13 event disambiguation (reference event_graphrag_neo4j.py:600-673:
@@ -290,12 +291,8 @@ object Canonicalizer {
     // hot event repeated across millions of pages would otherwise form
     // one quadratic LSH bucket — the hot-entity star problem (SURVEY.md
     // §4.3) in event form (the reference's all-pairs KNN has the same
-    // blowup; this is the documented scale deviation). The table feeds
-    // the bucket lists and both verify joins, so it is checkpointed —
-    // LAZILY: Result construction must not pay an eager job for a frame
-    // the caller may never consume (SparkEntry.entry uses only
-    // edges/entities).
-    val emb = eventVecs(events).localCheckpoint(false)
+    // blowup; this is the documented scale deviation).
+    val emb = eventVecs(events)
     val buckets = emb
       .select(col("event_id"), explode(HyperplaneLSH.keys(col("emb"))).as("bucket"))
       .groupBy("bucket").agg(collect_list(col("event_id")).as("ms"))

@@ -22,9 +22,4 @@ object Jobs {
     val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
     (cp, obs.get("rows").asInstanceOf[Long])
   }
-
-  /** [[countedCheckpoint]] under `description`. */
-  def countedCheckpoint(spark: SparkSession, description: String)
-      (df: => DataFrame): (DataFrame, Long) =
-    named(spark, description)(countedCheckpoint(df))
 }

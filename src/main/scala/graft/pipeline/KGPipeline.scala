@@ -290,11 +290,11 @@ object KGPipeline {
   /** The KG DAG from the chunks extraction reads to the graph tables,
     * built once: each named frame, in dependency order, passes through
     * `stage`, and later frames read what it returned ([[runOnPages]]
-    * checkpoints the name map, [[KGJob]] commits every frame), with the
-    * frame's row count when the hook knows it without a job (the name
-    * map's feeds the endpoint rewrite's broadcast gate). Extraction and
-    * canonicalization are lazy, so a hook serving a committed stage
-    * never builds the extractor or runs the canonicalizer's jobs. */
+    * checkpoints the names and the name map, [[KGJob]] commits every
+    * frame), with the frame's row count when the hook knows it without a
+    * job (it feeds the verify's and the endpoint rewrite's broadcast
+    * gates). Extraction and canonicalization are lazy, so a hook serving
+    * a committed stage never builds the frames below it. */
   final class Graph(chunks: Dataset[ChunkRow], cfg: graft.GraftConfig,
       stage: String => (=> DataFrame) => (DataFrame, Option[Long]),
       stageDir: Option[String] = None) {
@@ -306,8 +306,10 @@ object KGPipeline {
     val eventEdges = frame("event_edges")(KGPipeline.eventEdges(events, extraction.eventRels))
     // chunkId in mentions/triples refers to the distinct chunk; re-join
     // provenance (all urls containing the chunk) happens on demand
-    private lazy val canonical = Canonicalizer.canonicalize(
-      mentions.withColumnRenamed("chunk_id", "chunkId"), cfg)
+    private lazy val names = Jobs.named(chunks.sparkSession, "canon: distinct-name agg (G12)") {
+      stage("names")(Canonicalizer.names(mentions.withColumnRenamed("chunk_id", "chunkId"), cfg))
+    }
+    private lazy val canonical = Canonicalizer.canonicalize(names._1, names._2, cfg)
     val entities = frame("entities")(canonical._1)
     val (nameMap, nameMapRows) = stage("name_map")(canonical._2)
     val edges = frame("edges")(Canonicalizer.rewriteTriples(
@@ -344,14 +346,18 @@ object KGPipeline {
   def runOnPages(spark: SparkSession, pages: Dataset[Page],
       fromHtml: Boolean = true, stageDir: Option[String] = None,
       cfg: graft.GraftConfig = graft.GraftConfig.default): Result = {
-    // nameMap feeds three joins (subj/obj endpoint rewrite +
-    // participant resolution) — checkpoint it so the canonicalization
-    // subtree computes once per action, counted in the checkpoint's own
-    // job; every other frame stays a plan of unknown size
-    def inMemory(name: String)(df: => DataFrame): (DataFrame, Option[Long]) =
-      if (name != "name_map") (df, None)
-      else Jobs.countedCheckpoint(spark, "canon: nameMap checkpoint")(df) match {
-        case (cp, n) => (cp, Some(n)) }
+    // names (read by the LSH banding, the verify and the CC) and the name
+    // map (by the endpoint rewrite and participant resolution) are each
+    // checkpointed and counted in one job, so their subtrees compute once
+    // per action; every other frame stays a plan of unknown size
+    def inMemory(name: String)(df: => DataFrame): (DataFrame, Option[Long]) = {
+      def counted = Jobs.countedCheckpoint(df) match { case (cp, n) => (cp, Some(n)) }
+      name match {
+        case "names" => counted // under the Graph's G12 label
+        case "name_map" => Jobs.named(spark, "canon: nameMap checkpoint")(counted)
+        case _ => (df, None)
+      }
+    }
     val chunks = chunk(pages, fromHtml)
     val g = new Graph(chunks, cfg, inMemory, stageDir)
     Result(pages, chunks, g.mentions, g.triples, g.events, g.entities,

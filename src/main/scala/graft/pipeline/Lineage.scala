@@ -323,13 +323,13 @@ object KGJob {
     // job fingerprint = input identity (every stage's data depends on
     // nPages); the cfg-dependent canonicalization tail additionally
     // stamps the full tuning config (case-class toString is canonical),
-    // so `resume --merge-threshold=0.99` recomputes entities/name_map/
-    // edges/participates/event_similar but still reuses the expensive
-    // extraction front
+    // so `resume --merge-threshold=0.99` recomputes names/entities/
+    // name_map/edges/participates/event_similar but still reuses the
+    // expensive extraction front
     val lin = new Lineage(spark, outDir, s"run_$nPages", resume,
       jobFingerprint = nPages.toString)
     val cfgFp = cfg.toString
-    val tuned = Set("entities", "name_map", "edges", "participates", "event_similar")
+    val tuned = Set("names", "entities", "name_map", "edges", "participates", "event_similar")
     // requires name_key: a resume over an outDir committed before the
     // name map carried it would otherwise reuse the 2-column table and
     // break the alias-closure/entity-counts consumers downstream

@@ -49,11 +49,12 @@ class GraftConfigSpec extends SparkSpec {
       ("chunk_a", 0, "Spark Engine", "TECH", "d1"),
       ("chunk_b", 0, "Spark-Engine", "TECH", "d2"))
       .toDF("chunkId", "ord", "entityName", "entityType", "entityDescription")
-    val (merged, mapDefault) = Canonicalizer.canonicalize(mentions)
+    val (merged, mapDefault) = Canonicalizer.canonicalize(Canonicalizer.names(mentions), None)
     assert(merged.count() == 1)
     assert(mapDefault.select("canonical_id").distinct().count() == 1)
-    val (split, mapStrict) = Canonicalizer.canonicalize(mentions,
-      GraftConfig(mergeThreshold = 1.5))
+    val strict = GraftConfig(mergeThreshold = 1.5)
+    val (split, mapStrict) = Canonicalizer.canonicalize(Canonicalizer.names(mentions, strict),
+      None, strict)
     assert(split.count() == 2)
     assert(mapStrict.select("canonical_id").distinct().count() == 2)
   }

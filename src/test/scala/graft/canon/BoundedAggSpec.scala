@@ -2,6 +2,8 @@ package graft.canon
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 class BoundedAggSpec extends SparkSpec {
 
@@ -49,6 +51,37 @@ class BoundedAggSpec extends SparkSpec {
       .agg(slice(sort_array(collect_set("v")), 1, 8).as("s"))
       .orderBy("k").collect().map(r => (r.getString(0), r.getSeq[String](1)))
     assert(twoPhase.toSeq == onePhase.toSeq)
+  }
+
+  test("property: two-phase distinctMin -> distinctMinFlat equals single-phase, any salts, partitions and cap") {
+    import spark.implicits._
+    // the G12 names aggregate's shape: partial caps per (key, salt), the
+    // merge caps per key. Values mix supplementary-plane strings (whose
+    // UTF-8 order differs from compareTo) and NULLs (skipped by both)
+    val pool = Seq("a", "b", "c0", "c1", "", "￿", "𠀀", "𠀁", "zz", "Z")
+    val cases = for {
+      salts <- Gen.choose(1, 8)
+      parts <- Gen.choose(1, 8)
+      rows <- Gen.listOf(Gen.zip(Gen.oneOf("k0", "k1", "k2"), Gen.choose(0, salts - 1),
+        Gen.option(Gen.oneOf(pool))))
+      // caps from 1 up to above the largest group's distinct count
+      cap <- Gen.choose(1, rows.flatMap(_._3).distinct.size + 2)
+    } yield (rows, parts, cap)
+    def twoPhaseEqualsOnePhase(rows: List[(String, Int, Option[String])], parts: Int,
+        cap: Int): Boolean = {
+      val df = rows.toDF("k", "salt", "v").repartition(parts)
+      val twoPhase = df.groupBy("k", "salt")
+        .agg(BoundedAgg.distinctMin(col("v"), cap).as("partial"))
+        .groupBy("k").agg(BoundedAgg.distinctMinFlat(col("partial"), cap).as("s"))
+      val onePhase = df.groupBy("k").agg(slice(sort_array(collect_set("v")), 1, cap).as("s"))
+      def rowsOf(r: org.apache.spark.sql.DataFrame) =
+        r.collect().map(x => x.getString(0) -> x.getSeq[String](1)).toMap
+      rowsOf(twoPhase) == rowsOf(onePhase)
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(12).withInitialSeed(Seed(29L)),
+      Prop.forAll(cases) { case (rows, parts, cap) => twoPhaseEqualsOnePhase(rows, parts, cap) })
+    assert(result.passed, result.status.toString)
   }
 
   test("allOrNothing: full member set at cap, NULL at cap + 1, NULLs skipped, any partitioning") {

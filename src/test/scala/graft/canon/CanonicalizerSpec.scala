@@ -24,7 +24,7 @@ class CanonicalizerSpec extends SparkSpec {
     // O(n^2) semantics, Base_Neo4j.py:508-626), must end in one
     // component of canonicalize's output.
     val cfg = graft.GraftConfig.default
-    val (_, nameMap) = Canonicalizer.canonicalize(mentions, cfg)
+    val (_, nameMap) = Canonicalizer.canonicalize(Canonicalizer.names(mentions, cfg), None, cfg)
     val byRaw = nameMap.select("entity_name", "name_key", "canonical_id")
       .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     // each name embeds its display name: the normalized surface of its
@@ -59,12 +59,12 @@ class CanonicalizerSpec extends SparkSpec {
   }
 
   test("canonicalize does not depend on input row order") {
-    val (entities, nameMap) = Canonicalizer.canonicalize(mentions)
+    val (entities, nameMap) = Canonicalizer.canonicalize(Canonicalizer.names(mentions), None)
     val (e0, m0) = (sortedRows(entities), sortedRows(nameMap))
     assert(e0.nonEmpty && m0.nonEmpty)
     for (seed <- Seq(1L, 2L, 3L)) {
       val permuted = mentions.orderBy(rand(seed)).repartition(3 + seed.toInt)
-      val (e, m) = Canonicalizer.canonicalize(permuted)
+      val (e, m) = Canonicalizer.canonicalize(Canonicalizer.names(permuted), None)
       assert(sortedRows(e) == e0, s"entities differ under row-order seed $seed")
       assert(sortedRows(m) == m0, s"name map differs under row-order seed $seed")
     }

@@ -32,12 +32,16 @@ class ConnectedComponentsSpec extends SparkSpec {
   private def endpoints(edges: DataFrame): DataFrame =
     edges.select(col("src").as("id")).union(edges.select(col("dst").as("id"))).distinct()
 
+  /** The default local-solve cap, pinned: `LocalSolveMax` reads
+    * GRAFT_CC_LOCAL_MAX, and 0 there would test the distributed path
+    * twice. */
+  private val localMax = 500000L
+
   /** (id -> component) over the edge endpoints, on the driver union-find
     * fast path (local = true) or the distributed large-star/small-star
     * fixpoint (localSolveMax = 0). */
   private def solve(edges: DataFrame, local: Boolean): DataFrame =
-    ConnectedComponents.components(edges, endpoints(edges),
-      if (local) ConnectedComponents.LocalSolveMax else 0L)
+    ConnectedComponents.components(edges, endpoints(edges), if (local) localMax else 0L)
 
   /** Both paths must match the oracle. */
   private def check(edges: Seq[(Long, Long)]): Unit = {
@@ -131,7 +135,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("an isolated vertex is its own component, both paths") {
     val edges = Seq((1L, 2L)).toDF("src", "dst")
     val verts = Seq(1L, 2L, 3L).toDF("id")
-    for (max <- Seq(ConnectedComponents.LocalSolveMax, 0L)) {
+    for (max <- Seq(localMax, 0L)) {
       val got = ConnectedComponents.components(edges, verts, max)
         .as[(Long, Long)].collect().toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"localSolveMax = $max")
@@ -144,7 +148,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       ("x", 4, Seq("x1")), ("lone", 5, Seq("l"))).toDF("id", "n", "aliases")
     val want = Set(("a", 1, Seq("a1"), "a"), ("b", 2, Seq.empty[String], "a"),
       ("c", 3, Seq("c1", "c2"), "a"), ("x", 4, Seq("x1"), "x"), ("lone", 5, Seq("l"), "lone"))
-    for (max <- Seq(ConnectedComponents.LocalSolveMax, 0L)) {
+    for (max <- Seq(localMax, 0L)) {
       val got = ConnectedComponents.components(edges, verts, max)
       assert(got.columns.toSeq == Seq("id", "n", "aliases", "component"), s"localSolveMax = $max")
       assert(got.as[(String, Int, Seq[String], String)].collect().toSet == want,

@@ -103,19 +103,22 @@ class PlanSpec extends SparkSpec {
     val r = graft.pipeline.KGPipeline.run(spark, 60, partitions = 2)
     val (nameMapRows, entityRows, eventRows, chunkRows) = (r.nameMap.count(),
       r.entities.count(), r.events.count(), r.chunks.count())
-    // canonicalize's eager checkpoints are its only jobs, each labelled:
-    // the names checkpoint (G12), the connected components' one edge
-    // checkpoint (run under G9, whose band join it executes) and the
-    // collect of that checkpoint for the driver union-find. The local
-    // solve cap is pinned: GRAFT_CC_LOCAL_MAX=0 would take the distributed
-    // path, whose round labels this set does not list
-    val canon = jobsDuring(Canonicalizer.canonicalize(
-      r.mentions.withColumnRenamed("chunk_id", "chunkId"),
-      graft.GraftConfig.default.copy(ccLocalSolveMax = 500000L)))
-    assert(canon.distinct.toSet == Set("canon: distinct-name agg (G12)",
-      "canon: LSH band join + cosine verify (G9)",
+    // over a checkpointed names frame, canonicalize's only jobs are the
+    // connected components' edge checkpoint (run under G9, whose band
+    // join it executes) and the collect of that checkpoint for the
+    // driver union-find. The local solve cap is pinned:
+    // GRAFT_CC_LOCAL_MAX=0 would take the distributed path, whose round
+    // labels this set does not list
+    val cfg = graft.GraftConfig.default.copy(ccLocalSolveMax = 500000L)
+    val mentions = r.mentions.withColumnRenamed("chunk_id", "chunkId")
+    val (names, nameRows) =
+      graft.pipeline.Jobs.countedCheckpoint(Canonicalizer.names(mentions, cfg))
+    val canon = jobsDuring(Canonicalizer.canonicalize(names, Some(nameRows), cfg))
+    assert(canon.distinct.toSet == Set("canon: LSH band join + cosine verify (G9)",
       "cc: edge collect for the driver union-find"), canon.mkString("; "))
     val built = Seq(
+      "names" -> jobsDuring(Canonicalizer.names(mentions, cfg)),
+      "eventKnn" -> jobsDuring(Canonicalizer.eventKnn(r.events, 10, 0.85)),
       "rewriteTriples" -> jobsDuring(Canonicalizer.rewriteTriples(
         r.triples.withColumnRenamed("chunk_id", "chunkId"), r.nameMap, Some(nameMapRows))),
       "integrity" -> jobsDuring(graft.sink.GraphSink.integrity(r, graft.GraftConfig.default,
@@ -128,6 +131,15 @@ class PlanSpec extends SparkSpec {
         jobsDuring(graft.Tables.documents(spark, sf0001)).size else 0
       assert(jobs.size == allowed, s"$name launched ${jobs.size} jobs: ${jobs.mkString("; ")}")
     }
+  }
+
+  test("the event KNN reads its events' plan, not a checkpoint of it") {
+    import spark.implicits._
+    val events = Seq(("e1", "发动机故障"), ("e2", "发动机故障了"), ("e3", "更换轮胎"))
+      .toDF("event_id", "content")
+    val p = graft.canon.Canonicalizer.eventKnn(events, 10, 0.85).queryExecution.optimizedPlan
+    val rddScans = p.collect { case l: org.apache.spark.sql.execution.LogicalRDD => l }
+    assert(rddScans.isEmpty, p.toString)
   }
 
   test("zh BM25 scoring joins stay broadcast on the query/idf side") {

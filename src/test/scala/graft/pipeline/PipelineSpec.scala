@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.canon.Canonicalizer
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -118,15 +119,15 @@ class PipelineSpec extends SparkSpec {
       ("chunk_aa", 0, "widget", "ToolZ", "first chunk, first mention"),
       ("chunk_cc", 0, "Widget", "ToolC", "third chunk")
     ).toDF("chunkId", "ord", "entityName", "entityType", "entityDescription")
-    val (entities, _) = graft.canon.Canonicalizer.canonicalize(mentions)
+    val (entities, _) = Canonicalizer.canonicalize(Canonicalizer.names(mentions), None)
     val row = entities.select("entity_name", "entity_type", "n_mentions").head()
     assert(row.getString(0) == "widget", s"display: ${row.getString(0)}")
     assert(row.getString(1) == "ToolZ", s"type: ${row.getString(1)}")
     assert(row.getLong(2) == 4L)
     // without an ord column the per-chunk order defaults flat (ord=0)
     // but chunk order still decides deterministically
-    val (e2, _) = graft.canon.Canonicalizer.canonicalize(
-      mentions.drop("ord").filter(col("chunkId") =!= "chunk_aa"))
+    val (e2, _) = Canonicalizer.canonicalize(Canonicalizer.names(
+      mentions.drop("ord").filter(col("chunkId") =!= "chunk_aa")), None)
     assert(e2.select("entity_type").head().getString(0) == "ToolB")
   }
 
@@ -238,7 +239,8 @@ class PipelineSpec extends SparkSpec {
     KGJob.run(spark, 40, dir, resume = false, partitions = 2)
     def metricRows(stage: String): Long = spark.read
       .parquet(s"$dir/_metrics").filter(col("stage") === stage).count()
-    val (entBefore, chBefore) = (metricRows("entities"), metricRows("chunks"))
+    val (entBefore, namesBefore, chBefore) =
+      (metricRows("entities"), metricRows("names"), metricRows("chunks"))
     // a resumed run with a retuned canonicalization flag must NOT serve
     // the old run's entities (the flags would be silently ignored), but
     // the extraction front is cfg-independent and must be reused
@@ -246,14 +248,19 @@ class PipelineSpec extends SparkSpec {
       cfg = graft.GraftConfig.default.copy(mergeThreshold = 0.999))
     assert(metricRows("entities") > entBefore,
       "resume served entities computed under different flags")
+    // the names stage is cfg-stamped like the rest of the tail
+    assert(metricRows("names") > namesBefore,
+      "resume served names committed under different flags")
     assert(metricRows("chunks") == chBefore,
       "cfg-independent extraction stage was recomputed on a flag change")
     // and a second resume with the SAME retuned flags reuses everything
-    val entAfter = metricRows("entities")
+    val (entAfter, namesAfter) = (metricRows("entities"), metricRows("names"))
     KGJob.run(spark, 40, dir, resume = true, partitions = 2,
       cfg = graft.GraftConfig.default.copy(mergeThreshold = 0.999))
     assert(metricRows("entities") == entAfter,
       "matching-flag resume recomputed the canonicalization tail")
+    assert(metricRows("names") == namesAfter,
+      "matching-flag resume recomputed the names stage")
   }
 
   test("a merge-threshold retune resume equals a fresh run at the new threshold") {
@@ -277,9 +284,12 @@ class PipelineSpec extends SparkSpec {
   test("output-neutral knobs leave the KG unchanged") {
     // salts, the broadcast cap and the CC local-solve gate pick a
     // physical strategy only: each must give the default rows
-    val base = KGPipeline.run(spark, 150, partitions = 4)
+    // the base pins the driver CC path: the default reads
+    // GRAFT_CC_LOCAL_MAX, and 0 there would compare the distributed path
+    // with itself
+    val d = graft.GraftConfig.default.copy(ccLocalSolveMax = 500000L)
+    val base = KGPipeline.run(spark, 150, partitions = 4, cfg = d)
     val want = Seq(base.entities, base.nameMap, base.edges).map(sortedRows)
-    val d = graft.GraftConfig.default
     for ((knob, cfg) <- Seq("salts = 1" -> d.copy(salts = 1),
         "broadcastNameMapMax = 0" -> d.copy(broadcastNameMapMax = 0L),
         "ccLocalSolveMax = 0" -> d.copy(ccLocalSolveMax = 0L))) {
@@ -330,7 +340,7 @@ class PipelineSpec extends SparkSpec {
       col("entity_type").as("entityType"),
       lit("").as("entityDescription"),
       col("canonical_id").as("chunkId"))
-    val (round2, _) = graft.canon.Canonicalizer.canonicalize(asMentions)
+    val (round2, _) = Canonicalizer.canonicalize(Canonicalizer.names(asMentions), None)
     assert(round2.count() == r.entities.count(), "entity count changed on re-run")
     assert(round2.filter(col("n_merged_names") > 1).count() == 0,
       "representatives merged again on re-run")

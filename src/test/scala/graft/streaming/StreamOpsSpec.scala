@@ -91,8 +91,8 @@ class StreamOpsSpec extends SparkSpec {
       == setOf(batch.eventEdges), "event edges diverge")
 
     // canonicalization + endpoint rewrite over the consolidated stream
-    val (ents, nm0) = graft.canon.Canonicalizer.canonicalize(
-      cons.mentions.withColumnRenamed("chunk_id", "chunkId"))
+    val (ents, nm0) = graft.canon.Canonicalizer.canonicalize(graft.canon.Canonicalizer.names(
+      cons.mentions.withColumnRenamed("chunk_id", "chunkId")), None)
     val cols = Seq("canonical_id", "entity_name", "entity_type",
       "n_mentions", "n_merged_names")
     assert(setOf(ents.select(cols.head, cols.tail: _*))
